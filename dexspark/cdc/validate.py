@@ -105,8 +105,9 @@ def text_wellformed_expr(col: F.Column) -> F.Column:
     for every batch — measurable at 16M-event scale. The UDF variant
     (`text_check="arrow"`) remains as the extension seam for checks
     that genuinely need Python (semantic classifiers, tokenizer
-    round-trips); `tests/test_functions.py` pins the two modes to
-    identical verdicts across the whitespace/NUL edge battery.
+    round-trips); `tests/test_cdc_core.py::test_text_check_modes_agree`
+    pins the two modes to identical verdicts across the whitespace/NUL
+    edge battery.
     """
     stripped_nonempty = F.coalesce(
         F.length(F.btrim(col, F.lit(_PY_WHITESPACE))), F.lit(0)

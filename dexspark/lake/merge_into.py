@@ -80,7 +80,6 @@ def merge_into(
 ) -> dict[str, Any]:
     """Execute the MERGE statement against ``table``; returns commit
     info. See module docstring for semantics."""
-    from dexspark.lake import table as lt
 
     wm = _check_clauses("when_matched", when_matched, {"update", "delete"})
     wnm = _check_clauses("when_not_matched", when_not_matched, {"insert"})
@@ -113,26 +112,20 @@ def merge_into(
 
     source = source.persist()
     try:
-        for attempt in range(lt.MAX_COMMIT_RETRIES + 1):
-            try:
-                return _attempt(
-                    table, source, key_cols, wm, wnm, wnmbs, lsn, summary
-                )
-            except lt.CommitConflict:
-                if attempt == lt.MAX_COMMIT_RETRIES:
-                    raise
-                lt._conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+        return table._transact(
+            lambda m: _attempt(
+                table, m, source, key_cols, wm, wnm, wnmbs, lsn, summary
+            )
+        )
     finally:
         source.unpersist()
 
 
-def _attempt(table, source, key_cols, wm, wnm, wnmbs, lsn, summary):
+def _attempt(table, m, source, key_cols, wm, wnm, wnmbs, lsn, summary):
     from dexspark.lake.table import (
         BUCKET_COL, SYS_DELETED, SYS_LSN, _align,
     )
 
-    m = table.manifest()
     current = table.schema(m.version)
     data_cols = [f.name for f in current.fields]
     src_cols = set(source.columns)

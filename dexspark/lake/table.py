@@ -25,10 +25,11 @@ batch whose batch_id is already in a committed summary is a no-op.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import math
 import os
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -88,14 +89,20 @@ _WIDENINGS = {
 class CommitConflict(Exception):
     """Another writer committed the same version first.
 
-    Raised to callers only after the optimistic retry machinery gives
-    up: rebase-safe commits (pure additions, or rewrites whose input
-    files are still live in the new head) are re-pointed at the new
-    head automatically; rebase-unsafe ones are recomputed from the new
-    head by the operation's retry loop (up to ``MAX_COMMIT_RETRIES``).
-    ≙ the reference's at-least-once activity retry under Durable
-    Functions (FnOrchestrator.kt:182-192) — a lost race costs a retry,
-    never the job.
+    Raised to callers only after the optimistic machinery gives up.
+    Two levels handle a lost race. ``_commit_delta`` REBASES a commit
+    whose work is still valid on the new head: append, MOR merge,
+    ``delete_where`` and ``build_blooms`` (while the files they
+    rewrote are still live), and COW merge / ``merge_into`` /
+    ``compact`` (while no concurrent commit changed data in their
+    buckets). Everything else RECOMPUTES: ``LakeTable._transact``
+    backs off, re-reads the head and re-runs the operation (up to
+    ``MAX_COMMIT_RETRIES`` times) — always for overwrite, rebucket,
+    evolve_layout, rollback and the schema/constraint commits, and for
+    any rebase ``_commit_delta`` refuses. ≙ the reference's
+    at-least-once activity retry under Durable Functions
+    (FnOrchestrator.kt:182-192) — a lost race costs a retry, never the
+    job.
     """
 
 
@@ -103,6 +110,10 @@ class CommitConflict(Exception):
 # conflict; each attempt re-reads the head manifest so livelock would
 # need a sustained faster writer on the SAME buckets
 MAX_COMMIT_RETRIES = 8
+# rebases of one computed commit onto successive new heads before
+# _commit_delta hands the conflict to the recompute level
+MAX_COMMIT_REBASES = 10
+_T = TypeVar("_T")
 
 # table property marking a column as secondary-bloom-indexed
 # (set-once by build_blooms; maintain() keeps coverage current)
@@ -498,8 +509,8 @@ class LakeTable:
         writer-local name (field-id mapping); a rename AFTER the
         build orphans the sidecars' names — conservative (no pruning,
         never wrong) until blooms are rebuilt under the new name."""
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             current = self.schema(m.version)
             if column not in current.fieldNames():
                 raise ValueError(f"no column {column!r} to index")
@@ -530,10 +541,8 @@ class LakeTable:
                 if not ok:
                     continue
                 built += 1
-                import dataclasses as _dc
-
                 updated.append(
-                    _dc.replace(f, bloom_cols=f.bloom_cols + [column])
+                    dataclasses.replace(f, bloom_cols=f.bloom_cols + [column])
                 )
             # record the column as INDEXED in table properties (set-
             # once, per column) so maintain() keeps coverage current as
@@ -567,22 +576,18 @@ class LakeTable:
                 "column": column,
                 "files_indexed": built,
             }
-            try:
-                self._commit_delta(
-                    m,
-                    {f.path for f in updated},
-                    updated,
-                    info,
-                    prop_updates=prop_updates,
-                    affected_buckets={f.bucket for f in updated},
-                    surgical=True,
-                )
-                return info
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_delta(
+                m,
+                {f.path for f in updated},
+                updated,
+                info,
+                prop_updates=prop_updates,
+                affected_buckets={f.bucket for f in updated},
+                surgical=True,
+            )
+            return info
+
+        return self._transact(attempt)
 
     def resolve_as_of(self, ts: Any) -> int:
         """Version of the newest snapshot committed at or before
@@ -1061,27 +1066,56 @@ class LakeTable:
             persisted.unpersist()
         return new_files
 
+    def _transact(
+        self,
+        attempt: Callable[[mf.Manifest], _T],
+        base: mf.Manifest | None = None,
+    ) -> _T:
+        """Run ``attempt(head)`` under optimistic concurrency — the one
+        recompute loop every mutating operation shares (≙ Iceberg's
+        ``Transaction`` / Delta's ``OptimisticTransaction``).
+
+        ``attempt`` derives everything from the manifest it is handed,
+        computes, and commits through ``_commit_delta`` (which rebases
+        what it safely can) or ``_commit_next``. A ``CommitConflict``
+        escaping it means the work itself is stale: back off, re-read
+        the head and run it again, up to ``MAX_COMMIT_RETRIES`` times;
+        the last attempt's conflict reaches the caller. ``base`` serves
+        the first attempt when the caller already holds the head."""
+        for n in range(MAX_COMMIT_RETRIES):
+            head = base if n == 0 and base is not None else self.manifest()
+            try:
+                return attempt(head)
+            except CommitConflict:
+                # files the lost attempt wrote stay unreferenced —
+                # vacuum_orphans / expire clear them
+                _conflict_backoff(n)
+        return attempt(self.manifest())
+
     def _commit_next(
         self,
         base: mf.Manifest,
         files: list[mf.DataFile],
         summary: dict[str, Any],
-        schemas: dict[int, str] | None = None,
-        current_schema_id: int | None = None,
-        properties: dict[str, str] | None = None,
-        field_ids: dict[int, dict[str, int]] | None = None,
+        template: mf.Manifest | None = None,
+        **changes: Any,
     ) -> mf.Manifest:
-        nxt = mf.Manifest(
+        """Publish ``base``'s successor holding ``files`` — the only
+        builder of a successor manifest. Table metadata (schemas,
+        layout, properties, field ids) carries over from ``template``
+        (default ``base``; rollback and publish adopt another
+        snapshot's), with ``changes`` overriding single fields
+        (``num_buckets=``, ``properties=``, ...). Raises CommitConflict
+        when another writer took the version first."""
+        nxt = dataclasses.replace(
+            template or base,
             version=base.version + 1,
-            current_schema_id=current_schema_id or base.current_schema_id,
-            schemas=schemas or base.schemas,
-            bucket_key=base.bucket_key,
-            num_buckets=base.num_buckets,
+            parent=base.version,
             files=files,
             summary=summary,
-            parent=base.version,
-            properties=properties if properties is not None else base.properties,
-            field_ids=field_ids if field_ids is not None else base.field_ids,
+            committed_at=None,
+            segment_names={},
+            **changes,
         )
         try:
             mf.commit_manifest(self.meta_dir, nxt, base=base)
@@ -1187,7 +1221,6 @@ class LakeTable:
         summary: dict[str, Any],
         prop_updates: dict[str, str] | None = None,
         affected_buckets: set[int] | None = None,
-        max_rebases: int = 10,
         surgical: bool = False,
     ) -> mf.Manifest:
         """Commit a file-level delta with optimistic rebase.
@@ -1227,23 +1260,25 @@ class LakeTable:
         are append-only, so our files' writer-schema tags stay valid)
         and re-applies ``prop_updates`` on top of the head's
         properties, failing loudly on a merge-key disagreement.
-        Unsafe → raises CommitConflict for the caller's recompute loop.
-        ≙ Iceberg's optimistic concurrency (validate + retry), the
-        engine analogue of the reference's activity retry
-        (FnOrchestrator.kt:182-192).
+        Unsafe → raises CommitConflict, which the operation's
+        ``_transact`` turns into a recompute from the new head. So
+        append, MOR merge, ``delete_where`` and ``build_blooms`` rebase
+        unless a guard below fires; COW merge, ``merge_into`` and
+        ``compact`` rebase only while their buckets' data is unchanged
+        and recompute otherwise. ≙ Iceberg's optimistic concurrency
+        (validate + retry), the engine analogue of the reference's
+        activity retry (FnOrchestrator.kt:182-192).
         """
         base = read_from
-        for _ in range(max_rebases + 1):
-            props = None
-            if prop_updates is not None:
-                props = dict(base.properties)
-                for k, v in prop_updates.items():
-                    if k in props and props[k] != v:
-                        raise ValueError(
-                            f"property conflict on {k!r}: "
-                            f"table has {props[k]!r}, commit wants {v!r}"
-                        )
-                    props[k] = v
+        for _ in range(MAX_COMMIT_REBASES + 1):
+            props = dict(base.properties)
+            for k, v in (prop_updates or {}).items():
+                if k in props and props[k] != v:
+                    raise ValueError(
+                        f"property conflict on {k!r}: "
+                        f"table has {props[k]!r}, commit wants {v!r}"
+                    )
+                props[k] = v
             if affected_buckets is None or surgical:
                 files = [f for f in base.files if f.path not in removed_paths]
             else:
@@ -1262,14 +1297,7 @@ class LakeTable:
                 files = [f for f in base.files if id(f) not in drop]
             files = files + added
             try:
-                return self._commit_next(
-                    base,
-                    files,
-                    summary,
-                    schemas=base.schemas,
-                    current_schema_id=base.current_schema_id,
-                    properties=props,
-                )
+                return self._commit_next(base, files, summary, properties=props)
             except CommitConflict:
                 head = self.manifest()
                 if head.bucket_key != read_from.bucket_key:
@@ -1330,28 +1358,22 @@ class LakeTable:
                         "the new head"
                     ) from None
                 base = head
-        raise CommitConflict(f"gave up after {max_rebases} rebases")
+        raise CommitConflict(f"gave up after {MAX_COMMIT_REBASES} rebases")
 
     def append(self, df: DataFrame, summary: dict[str, Any] | None = None) -> None:
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
-            current = self.schema()
-            src = _align(df, current)
+        def attempt(m: mf.Manifest) -> None:
+            src = _align(df, self.schema(m.version))
             self._check_constraints_job(src, m, f"append to {self.table_dir}")
             new_files = self._write_data(src, m)
-            try:
-                # purely additive: always rebasable — the only conflict
-                # that surfaces here is a concurrent rebucket, which
-                # invalidates our files' bucket ids → rewrite under the
-                # new layout (losers become orphans; vacuum_orphans GC)
-                self._commit_delta(
-                    m, set(), new_files, {"operation": "append", **(summary or {})}
-                )
-                return
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
+            # purely additive: always rebasable — the only conflict
+            # that surfaces here is a concurrent rebucket, which
+            # invalidates our files' bucket ids → rewrite under the
+            # new layout (losers become orphans; vacuum_orphans GC)
+            self._commit_delta(
+                m, set(), new_files, {"operation": "append", **(summary or {})}
+            )
+
+        self._transact(attempt)
 
     def overwrite(self, df: DataFrame, summary: dict[str, Any] | None = None) -> None:
         m = self.manifest()
@@ -1360,8 +1382,9 @@ class LakeTable:
         self._check_constraints_job(src, m, f"overwrite of {self.table_dir}")
         new_files = self._write_data(src, m)
         info = {"operation": "overwrite", **(summary or {})}
-        base = m
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
+
+        def attempt(base: mf.Manifest) -> None:
+            nonlocal m, new_files
             if base.num_buckets != m.num_buckets:
                 # a concurrent rebucket() won the race: our files carry
                 # bucket ids from the OLD layout — committing them under
@@ -1376,16 +1399,11 @@ class LakeTable:
                     _align(df, self.schema(base.version)), base
                 )
                 m = base
-            try:
-                # overwrite does not depend on prior content — clobber
-                # whatever head it lands on (snapshot-replace semantics)
-                self._commit_next(base, new_files, info)
-                return
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-                base = self.manifest()
+            # overwrite does not depend on prior content — clobber
+            # whatever head it lands on (snapshot-replace semantics)
+            self._commit_next(base, new_files, info)
+
+        self._transact(attempt, base=m)
 
     # ----------------------------------------------------------------- merge
     def merge(
@@ -1443,8 +1461,8 @@ class LakeTable:
         # caller-supplied bucket_stats were computed under the layout
         # the CALLER saw; if a rebucket() landed between the caller's
         # manifest read and ours, those bucket ids are stale in a way
-        # the in-loop drift guard (which compares against m0) can never
-        # see — discard them and recompute under m0
+        # the per-attempt drift guard (which compares against m0) can
+        # never see — discard them and recompute under m0
         if (
             bucket_stats is not None
             and bucket_stats_layout is not None
@@ -1457,7 +1475,7 @@ class LakeTable:
             summary = _drop_stale_partitions(summary)
         own_persist = bucket_stats is None
         # bucket_key is immutable table identity; num_buckets can move
-        # under us via rebucket() — the retry loop below re-derives the
+        # under us via rebucket() — each attempt below re-derives the
         # bucket column and affected-bucket map on layout drift
         changes = changes.withColumn(BUCKET_COL, self._bucket_expr(m0))
         if own_persist:
@@ -1503,8 +1521,8 @@ class LakeTable:
             batch_id = (summary or {}).get("batch_id")
             cur_layout = m0.num_buckets
 
-            for attempt in range(MAX_COMMIT_RETRIES + 1):
-                m = self.manifest() if attempt else m0
+            def attempt(m: mf.Manifest) -> dict[str, Any]:
+                nonlocal changes, affected, cur_layout, summary
                 if m.num_buckets != cur_layout:
                     # a concurrent rebucket() landed mid-merge: the
                     # change set's bucket column and the affected-bucket
@@ -1514,37 +1532,28 @@ class LakeTable:
                     changes = changes.withColumn(
                         BUCKET_COL, self._bucket_expr(m)
                     )
-                    bucket_stats = _stats_pass(changes)
-                    affected = set(bucket_stats)
+                    affected = set(_stats_pass(changes))
                     cur_layout = m.num_buckets
                     summary = _drop_stale_partitions(summary)
-                if attempt and batch_id is not None and (
+                if m is not m0 and batch_id is not None and (
                     batch_id in self.committed_batch_ids()
                 ):
-                    # a concurrent writer landed this very batch while
-                    # we were losing the race — exactly-once holds
+                    # a retry: a concurrent writer landed this very
+                    # batch while we were losing the race — exactly-once
+                    # holds
                     return {
                         "operation": "merge",
                         "skipped": True,
                         "reason": "already_committed",
                         "batch_id": batch_id,
                     }
-                try:
-                    return self._merge_attempt(
-                        m, changes, key_cols, op_col, delete_value,
-                        summary, broadcast_threshold, lsn_col, strategy,
-                        affected, n_changes,
-                    )
-                except CommitConflict:
-                    if attempt == MAX_COMMIT_RETRIES:
-                        raise
-                    # recompute from the new head: the target view this
-                    # attempt merged against is stale (files written by
-                    # the failed attempt stay unreferenced — expire
-                    # clears orphans with their snapshots)
-                    _conflict_backoff(attempt)
-                    continue
-            raise AssertionError("unreachable")
+                return self._merge_attempt(
+                    m, changes, key_cols, op_col, delete_value,
+                    summary, broadcast_threshold, lsn_col, strategy,
+                    affected, n_changes,
+                )
+
+            return self._transact(attempt, base=m0)
         finally:
             if own_persist:
                 persisted.unpersist()
@@ -1798,8 +1807,9 @@ class LakeTable:
             )
         if strategy not in ("copy", "dv"):
             raise ValueError(f"unknown delete strategy {strategy!r}")
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
+            nonlocal filters
             current = self.schema(m.version)
             filters = lake_stats.canonicalize_filters(filters, current)
             current_sys = StructType(
@@ -1865,21 +1875,15 @@ class LakeTable:
                     **(summary or {}),
                 }
             if strategy == "dv":
-                try:
-                    return self._delete_dv_attempt(
-                        m,
-                        current_sys,
-                        filters,
-                        cand_files,
-                        cand_delta,
-                        delta_files,
-                        summary,
-                    )
-                except CommitConflict:
-                    if attempt == MAX_COMMIT_RETRIES:
-                        raise
-                    _conflict_backoff(attempt)
-                    continue
+                return self._delete_dv_attempt(
+                    m,
+                    current_sys,
+                    filters,
+                    cand_files,
+                    cand_delta,
+                    delta_files,
+                    summary,
+                )
             parts = []
             if cand_files:
                 parts.append(self._scan_files(cand_files, m, current_sys))
@@ -1933,21 +1937,17 @@ class LakeTable:
                 "files_kept": len(m.files) - len(removed),
                 **(summary or {}),
             }
-            try:
-                self._commit_delta(
-                    m,
-                    removed,
-                    new_files,
-                    info,
-                    affected_buckets=affected,
-                    surgical=True,
-                )
-                return info
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_delta(
+                m,
+                removed,
+                new_files,
+                info,
+                affected_buckets=affected,
+                surgical=True,
+            )
+            return info
+
+        return self._transact(attempt)
 
     def _delete_dv_attempt(
         self,
@@ -1965,7 +1965,7 @@ class LakeTable:
         directory; MOR-delta-bucket matches fold to base (the same
         rewrite copy mode does — positional deletes against unresolved
         version stacks are unsafe). Raises CommitConflict for the
-        caller's retry loop."""
+        caller's ``_transact``."""
         doomed = F.coalesce(
             lake_stats.residual_condition(filters)
             & ~F.coalesce(F.col(SYS_DELETED), F.lit(False)),
@@ -2046,11 +2046,9 @@ class LakeTable:
                 dv_rel = lake_dv.write_dv_dir(
                     all_pos, self.table_dir, token
                 )
-                import dataclasses as _dc
-
                 for f in upd:
                     upd_entries.append(
-                        _dc.replace(
+                        dataclasses.replace(
                             f,
                             dv=dv_rel,
                             dv_count=f.dv_count + new_by_path[f.path],
@@ -2117,10 +2115,8 @@ class LakeTable:
         """
         if new_num_buckets < 1:
             raise ValueError("new_num_buckets must be >= 1")
-        import dataclasses
 
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             if m.num_buckets == new_num_buckets:
                 return {
                     "operation": "rebucket",
@@ -2139,32 +2135,12 @@ class LakeTable:
                 "files": len(new_files),
                 **(summary or {}),
             }
-            nxt = mf.Manifest(
-                version=m.version + 1,
-                current_schema_id=m.current_schema_id,
-                schemas=m.schemas,
-                bucket_key=m.bucket_key,
-                num_buckets=new_num_buckets,
-                files=new_files,
-                summary=info,
-                parent=m.version,
-                properties=m.properties,
-                field_ids=m.field_ids,
-            )
-            try:
-                mf.commit_manifest(self.meta_dir, nxt)
-                return info
-            except FileExistsError:
-                # lost to a concurrent data commit — the rewrite is
-                # stale in content, not just placement: recompute
-                # (orphaned output is vacuum_orphans' job)
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise CommitConflict(
-                        f"rebucket lost the commit race {attempt + 1} times "
-                        f"at {self.meta_dir}"
-                    ) from None
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            # a lost race means the rewrite is stale in content, not
+            # just placement: no rebase, _transact recomputes
+            self._commit_next(m, new_files, info, num_buckets=new_num_buckets)
+            return info
+
+        return self._transact(attempt)
 
     def evolve_layout(
         self, new_num_buckets: int, summary: dict[str, Any] | None = None
@@ -2206,8 +2182,8 @@ class LakeTable:
         their files self-describe their layout and rebase cleanly —
         see ``_commit_delta``'s layout-drift guard.
         """
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             if m.num_buckets == new_num_buckets:
                 return {
                     "operation": "evolve_layout",
@@ -2216,8 +2192,6 @@ class LakeTable:
                 }
             live = {f.layout for f in m.files} | {m.num_buckets}
             lake_layout.validate_evolution(new_num_buckets, live)
-            import dataclasses
-
             # fresh entry objects with the layout EXPLICIT: breaks
             # format-2 shard reuse-by-pointer for this one commit, so
             # every shard is re-serialized carrying the layout field —
@@ -2237,29 +2211,10 @@ class LakeTable:
                 "files_pending_migration": len(files),
                 **(summary or {}),
             }
-            nxt = mf.Manifest(
-                version=m.version + 1,
-                current_schema_id=m.current_schema_id,
-                schemas=m.schemas,
-                bucket_key=m.bucket_key,
-                num_buckets=new_num_buckets,
-                files=files,
-                summary=info,
-                parent=m.version,
-                properties=m.properties,
-                field_ids=m.field_ids,
-            )
-            try:
-                mf.commit_manifest(self.meta_dir, nxt)
-                return info
-            except FileExistsError:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise CommitConflict(
-                        f"evolve_layout lost the commit race "
-                        f"{attempt + 1} times at {self.meta_dir}"
-                    ) from None
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_next(m, files, info, num_buckets=new_num_buckets)
+            return info
+
+        return self._transact(attempt)
 
     def layout_status(self, version: int | None = None) -> dict[str, Any]:
         """Migration progress: files and rows per layout, and whether
@@ -2316,8 +2271,8 @@ class LakeTable:
         """
         if zorder and not cluster_by:
             raise ValueError("zorder=True requires cluster_by columns")
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             n_cur = m.num_buckets
             # placement groups (layout, bucket) — after evolve_layout
             # the same bucket id can exist under two layouts, so raw
@@ -2411,20 +2366,16 @@ class LakeTable:
                 **({"zorder": True} if zorder else {}),
                 **(summary or {}),
             }
-            try:
-                # maintenance yields to the data plane: a concurrent
-                # write into a compacted bucket aborts this attempt and
-                # the loop recomputes over the fresh head (≙ Iceberg's
-                # RewriteDataFiles conflict behavior)
-                self._commit_delta(
-                    m, removed, new_files, info, affected_buckets=affected
-                )
-                return info
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            # maintenance yields to the data plane: a concurrent write
+            # into a compacted bucket aborts this attempt and _transact
+            # recomputes over the fresh head (≙ Iceberg's
+            # RewriteDataFiles conflict behavior)
+            self._commit_delta(
+                m, removed, new_files, info, affected_buckets=affected
+            )
+            return info
+
+        return self._transact(attempt)
 
     def bloom_indexed_columns(self, version: int | None = None) -> list[str]:
         """Columns declared secondary-bloom-indexed (``build_blooms``
@@ -2630,8 +2581,8 @@ class LakeTable:
                 "fork point from a branch"
             )
         target = self.manifest(to_version)  # raises if expired/unknown
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            head = self.manifest()
+
+        def attempt(head: mf.Manifest) -> dict[str, Any]:
             if to_version == head.version:
                 return {
                     "operation": "rollback",
@@ -2644,29 +2595,10 @@ class LakeTable:
                 "rolled_back_from": head.version,
                 **(summary or {}),
             }
-            nxt = mf.Manifest(
-                version=head.version + 1,
-                current_schema_id=target.current_schema_id,
-                schemas=target.schemas,
-                bucket_key=target.bucket_key,
-                num_buckets=target.num_buckets,
-                files=list(target.files),
-                summary=info,
-                parent=head.version,
-                properties=target.properties,
-                field_ids=target.field_ids,
-            )
-            try:
-                mf.commit_manifest(self.meta_dir, nxt)
-                return info
-            except FileExistsError:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise CommitConflict(
-                        f"rollback lost the commit race {attempt + 1} "
-                        f"times at {self.meta_dir}"
-                    ) from None
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_next(head, list(target.files), info, template=target)
+            return info
+
+        return self._transact(attempt)
 
     # ------------------------------------------------- branches (WAP)
     def create_branch(self, name: str) -> "LakeTable":
@@ -2827,21 +2759,9 @@ class LakeTable:
                 f"v{base} but main head is v{head.version} — re-branch "
                 "from the new head and re-stage"
             )
-        nxt = mf.Manifest(
-            version=head.version + 1,
-            current_schema_id=bhead.current_schema_id,
-            schemas=bhead.schemas,
-            bucket_key=bhead.bucket_key,
-            num_buckets=bhead.num_buckets,
-            files=list(bhead.files),
-            summary=info,
-            parent=head.version,
-            properties=bhead.properties,
-            field_ids=bhead.field_ids,
-        )
         try:
-            mf.commit_manifest(self.table_dir, nxt)
-        except FileExistsError:
+            self._commit_next(head, list(bhead.files), info, template=bhead)
+        except CommitConflict:
             raise CommitConflict(
                 f"cannot fast-forward branch {name!r}: main advanced "
                 "past the fork point during publish — re-branch from "
@@ -3151,8 +3071,8 @@ class LakeTable:
         Reference has no schema evolution (configs fixed, SURVEY §2.2);
         this is the north-rule requirement: ALTER-like DDL mid-replay.
         """
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> bool:
             current = self.schema(m.version)
             if new_schema.json() == current.json():
                 return False
@@ -3189,23 +3109,20 @@ class LakeTable:
                     new_map[fname] = nxt_id
                     nxt_id += 1
             ids[new_sid] = new_map
-            try:
-                # metadata-only: recompute on conflict is one manifest
-                # re-read + re-validate against the (possibly evolved)
-                # new head
-                self._commit_next(
-                    m,
-                    m.files,
-                    {"operation": "evolve_schema", "schema_id": new_sid},
-                    schemas=schemas,
-                    current_schema_id=new_sid,
-                    field_ids=ids,
-                )
-                return True
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-        raise AssertionError("unreachable")
+            # metadata-only: recompute on conflict is one manifest
+            # re-read + re-validate against the (possibly evolved) new
+            # head
+            self._commit_next(
+                m,
+                m.files,
+                {"operation": "evolve_schema", "schema_id": new_sid},
+                schemas=schemas,
+                current_schema_id=new_sid,
+                field_ids=ids,
+            )
+            return True
+
+        return self._transact(attempt)
 
     def _seeded_field_ids(self, m: mf.Manifest) -> dict[int, dict[str, int]]:
         """``field_ids`` with EVERY schema id covered. Pre-upgrade
@@ -3274,8 +3191,8 @@ class LakeTable:
                 f"got {on_violation!r}"
             )
         key = lake_ct.PREFIX + name
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             if key in m.properties:
                 raise ValueError(f"constraint {name!r} already exists")
             # analysis check: the predicate must resolve against the
@@ -3304,52 +3221,44 @@ class LakeTable:
             props[key] = json.dumps(
                 {"expr": expr, "on_violation": on_violation}
             )
-            try:
-                self._commit_next(
-                    m,
-                    m.files,
-                    {
-                        "operation": "add_constraint",
-                        "constraint": name,
-                        "on_violation": on_violation,
-                    },
-                    properties=props,
-                )
-                return {
-                    "name": name,
-                    "expr": expr,
+            self._commit_next(
+                m,
+                m.files,
+                {
+                    "operation": "add_constraint",
+                    "constraint": name,
                     "on_violation": on_violation,
-                    "validated_rows": n_checked,
-                }
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+                },
+                properties=props,
+            )
+            return {
+                "name": name,
+                "expr": expr,
+                "on_violation": on_violation,
+                "validated_rows": n_checked,
+            }
+
+        return self._transact(attempt)
 
     def drop_constraint(self, name: str) -> dict[str, Any]:
         """Remove a CHECK constraint (metadata-only commit). Time
         travel to earlier versions still shows it — constraints are
         versioned with the manifest like everything else."""
         key = lake_ct.PREFIX + name
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> dict[str, Any]:
             if key not in m.properties:
                 raise ValueError(f"no constraint {name!r}")
             props = {k: v for k, v in m.properties.items() if k != key}
-            try:
-                self._commit_next(
-                    m,
-                    m.files,
-                    {"operation": "drop_constraint", "constraint": name},
-                    properties=props,
-                )
-                return {"name": name, "dropped": True}
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_next(
+                m,
+                m.files,
+                {"operation": "drop_constraint", "constraint": name},
+                properties=props,
+            )
+            return {"name": name, "dropped": True}
+
+        return self._transact(attempt)
 
     def _fail_constraint_defs(self, m: mf.Manifest) -> dict[str, dict]:
         return {
@@ -3393,8 +3302,8 @@ class LakeTable:
         Returns the new schema id."""
         if not new or "." in new:
             raise ValueError(f"invalid column name {new!r}")
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> int:
             current = self.schema(m.version)
             names = current.fieldNames()
             if old not in names:
@@ -3421,26 +3330,22 @@ class LakeTable:
             schemas = dict(m.schemas)
             schemas[new_sid] = new_schema.json()
             ids[new_sid] = ids_new
-            try:
-                self._commit_next(
-                    m,
-                    m.files,
-                    {
-                        "operation": "rename_column",
-                        "from": old,
-                        "to": new,
-                        "schema_id": new_sid,
-                    },
-                    schemas=schemas,
-                    current_schema_id=new_sid,
-                    field_ids=ids,
-                )
-                return new_sid
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_next(
+                m,
+                m.files,
+                {
+                    "operation": "rename_column",
+                    "from": old,
+                    "to": new,
+                    "schema_id": new_sid,
+                },
+                schemas=schemas,
+                current_schema_id=new_sid,
+                field_ids=ids,
+            )
+            return new_sid
+
+        return self._transact(attempt)
 
     def drop_column(self, name: str) -> int:
         """Metadata-only column DROP. Existing files keep the bytes
@@ -3452,8 +3357,8 @@ class LakeTable:
         dropped column's bytes happens as files rewrite (compaction /
         deletes); a full `compact(cluster_by=...)` forces it
         everywhere. Returns the new schema id."""
-        for attempt in range(MAX_COMMIT_RETRIES + 1):
-            m = self.manifest()
+
+        def attempt(m: mf.Manifest) -> int:
             current = self.schema(m.version)
             if name not in current.fieldNames():
                 raise ValueError(f"no column {name!r} to drop")
@@ -3473,25 +3378,21 @@ class LakeTable:
             schemas = dict(m.schemas)
             schemas[new_sid] = new_schema.json()
             ids[new_sid] = ids_new
-            try:
-                self._commit_next(
-                    m,
-                    m.files,
-                    {
-                        "operation": "drop_column",
-                        "column": name,
-                        "schema_id": new_sid,
-                    },
-                    schemas=schemas,
-                    current_schema_id=new_sid,
-                    field_ids=ids,
-                )
-                return new_sid
-            except CommitConflict:
-                if attempt == MAX_COMMIT_RETRIES:
-                    raise
-                _conflict_backoff(attempt)
-        raise AssertionError("unreachable")
+            self._commit_next(
+                m,
+                m.files,
+                {
+                    "operation": "drop_column",
+                    "column": name,
+                    "schema_id": new_sid,
+                },
+                schemas=schemas,
+                current_schema_id=new_sid,
+                field_ids=ids,
+            )
+            return new_sid
+
+        return self._transact(attempt)
 
 
 def _align(

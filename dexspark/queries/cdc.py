@@ -376,7 +376,7 @@ def cdc_replay_dual_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     jobs without coordination. Unlike the maintenance race (layout vs
     data), both writers here mutate DATA in overlapping buckets, so
     losing commits must RECOMPUTE against the winner's state, not
-    rebase — the optimistic-retry loop in LakeTable.merge. LSN-gated
+    rebase — LakeTable._transact under LakeTable.merge. LSN-gated
     merge makes the interleaving irrelevant: the final state must
     equal a serial replay of the union bit-for-bit. Each writer's
     batches stay ordered within its own thread (per-source ordering,

@@ -271,20 +271,111 @@ def test_disjoint_bucket_merges_rebase_without_recompute(spark, tmp_table_dir):
     assert t.current_version() >= v0 + 2
 
 
-def test_evolve_schema_retries_over_concurrent_commit(spark, tmp_table_dir):
-    t = _mk(spark, tmp_table_dir, [("a", 1, "x")])
-    stale = t.manifest()
-    t.append(spark.createDataFrame([("b", 2, "y")], SCHEMA))
-    wider = StructType(
-        list(SCHEMA.fields) + [StructField("extra", StringType())]
-    )
-    # evolve re-reads the head internally; simulate the race by
-    # committing between its read and commit via a monkeypatched clock
-    # is overkill — the public contract is just that evolve succeeds
-    # against the newest head and the new column reads back NULL
-    assert t.evolve_schema(wider) is True
-    assert t.schema().fieldNames() == ["k", "seq", "v", "extra"]
-    assert stale.version + 2 == t.current_version()
+# ------------------------------------- every operation survives a real race
+# op -> (call, committed summary "operation", _conflict_backoff calls).
+# The racing append lands a file in key "a"'s bucket. A lost race is
+# REBASED (0 backoffs) when the op's work is still valid on the new
+# head — additive commits, and surgical rewrites whose input files are
+# still live — and RECOMPUTED (1 backoff) otherwise: replacement
+# rewrites of "a"'s bucket, and every commit that goes straight to
+# _commit_next (snapshot replace, layout, rollback, schema, constraints).
+RACE_OPS = {
+    "build_blooms": (lambda t: t.build_blooms("v"), "build_blooms", 0),
+    "append": (
+        lambda t: t.append(t.spark.createDataFrame([("c", 3, "z")], SCHEMA)),
+        "append", 0,
+    ),
+    "overwrite": (
+        lambda t: t.overwrite(t.spark.createDataFrame([("c", 3, "z")], SCHEMA)),
+        "overwrite", 1,
+    ),
+    "merge_cow": (
+        lambda t: t.merge(
+            _changes(t.spark, [("a", 1, "x2", "U", 10)]), key_cols=["k"],
+            summary={"batch_id": "m1"},
+        ),
+        "merge", 1,
+    ),
+    "merge_mor": (
+        lambda t: t.merge(
+            _changes(t.spark, [("a", 1, "x2", "U", 10)]), key_cols=["k"],
+            strategy="mor",
+        ),
+        "merge", 0,
+    ),
+    "delete_copy": (lambda t: t.delete_where([("k", "=", "b")]), "delete", 0),
+    "delete_dv": (
+        lambda t: t.delete_where([("k", "=", "b")], strategy="dv"), "delete", 0,
+    ),
+    "rebucket": (lambda t: t.rebucket(16), "rebucket", 1),
+    "evolve_layout": (lambda t: t.evolve_layout(16), "evolve_layout", 1),
+    "compact": (lambda t: t.compact(min_files_per_bucket=1), "compact", 1),
+    "rollback": (lambda t: t.rollback(1), "rollback", 1),
+    "evolve_schema": (
+        lambda t: t.evolve_schema(
+            StructType(SCHEMA.fields + [StructField("extra", StringType())])
+        ),
+        "evolve_schema", 1,
+    ),
+    "add_constraint": (
+        lambda t: t.add_constraint("seq_pos", "seq > 0"), "add_constraint", 1,
+    ),
+    "drop_constraint": (
+        lambda t: t.drop_constraint("seq_nn"), "drop_constraint", 1,
+    ),
+    "rename_column": (
+        lambda t: t.rename_column("v", "v2"), "rename_column", 1,
+    ),
+    "drop_column": (lambda t: t.drop_column("v"), "drop_column", 1),
+    "merge_into": (
+        lambda t: t.merge_into(
+            t.spark.createDataFrame([("a", 1, "x3")], SCHEMA), ["k"],
+            when_matched=[("update", None, {"v": "s.v"})],
+        ),
+        "merge_into", 1,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(RACE_OPS))
+def test_operation_survives_lost_commit_race(spark, tmp_table_dir, monkeypatch, op):
+    """A second handle on the same directory lands a real append just
+    before the operation's first commit, so the operation loses the
+    version race through the commit store. Both commits must survive,
+    the operation's commit parented on the append, with exactly the
+    backoffs its rebase-or-recompute class implies."""
+    import dexspark.lake.table as table_mod
+
+    call, operation, expected_backoffs = RACE_OPS[op]
+    t = _mk(spark, tmp_table_dir, [("a", 1, "x"), ("b", 2, "y")])
+    t.add_constraint("seq_nn", "seq IS NOT NULL", on_violation="drop")
+    start = t.current_version()
+    backoffs = []
+    monkeypatch.setattr(table_mod, "_conflict_backoff", backoffs.append)
+    real_commit = t._commit_next
+    race = {}
+
+    def racy_commit(base, files, summary, **kw):
+        if not race:
+            rival = LakeTable(spark, t.table_dir)
+            rival.append(
+                spark.createDataFrame([("a", 5, "r")], SCHEMA),
+                summary={"batch_id": "rival"},
+            )
+            race["version"] = rival.current_version()
+        return real_commit(base, files, summary, **kw)
+
+    t._commit_next = racy_commit
+    call(t)
+    assert race, f"{op} never reached _commit_next"
+    landed = t.manifest(race["version"])
+    assert landed.summary.get("batch_id") == "rival"
+    assert landed.parent == start
+    head = t.manifest()
+    assert head.summary["operation"] == operation
+    assert head.summary.get("batch_id") != "rival"
+    assert head.parent == race["version"] == head.version - 1
+    assert len(backoffs) == expected_backoffs
 
 
 def test_merge_keys_recorded_for_cow(spark, tmp_table_dir):
