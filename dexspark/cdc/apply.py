@@ -81,7 +81,14 @@ def apply_changes(
 
     ``strategy`` selects the merge mode: "cow" rewrites affected
     buckets (cheap reads), "mor" appends delta files (O(batch) writes,
-    read-time resolve) — see LakeTable.merge."""
+    read-time resolve) — see LakeTable.merge.
+
+    ``events`` must be deterministic: recomputing it must yield the
+    same rows. With no quarantine attached, a batch in which every
+    event is invalid has its reject counts recounted from ``events``
+    (the reject observation does not report on that path), so a source
+    built with ``rand()``/``uuid()`` upstream could commit reject
+    counts that disagree with the rows actually validated."""
     cfg = cfg or ValidationConfig()
     if batch_id in table.committed_batch_ids():
         return {"batch_id": batch_id, "skipped": True, "reason": "already_committed"}

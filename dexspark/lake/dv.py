@@ -31,6 +31,7 @@ anti-join broadcasts.
 from __future__ import annotations
 
 import os
+import threading
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +48,12 @@ DV_SCHEMA = StructType(
         StructField("pos", LongType(), False),
     ]
 )
+
+# Spark lists the paths of a new file relation with a distributed job
+# (one task per path) once there are more than this conf's value (32 by
+# default); see read_listed
+DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_DISCOVERY_LOCK = threading.Lock()
 
 # total recorded positions under which the anti-join's DV side is
 # broadcast; above it a plain shuffled anti-join (keyed by file path)
@@ -81,6 +88,40 @@ def relpath_expr(table_dir: str):
     )
 
 
+def read_listed(
+    spark: SparkSession, schema: StructType, paths: list[str]
+) -> DataFrame:
+    """Parquet relation over ``paths`` that a manifest already lists.
+    Every lake parquet relation (``LakeTable._scan_files``,
+    ``read_dvs``) is built here, so planning a read runs no Spark job.
+
+    Above the session's discovery threshold Spark would list the paths
+    with an N-task job, although the manifest is already the file
+    index. So for more paths than the threshold, the threshold is
+    raised to the path count only while the relation is built, under a
+    module lock, and the prior setting is restored afterwards (unset
+    again if it was unset). At or below the threshold nothing is
+    touched. Trade-off: the driver then stats the N listed files one
+    after another instead of in parallel tasks. On local disk that is
+    cheaper at every size measured: building a read over 1,024 files
+    took 0.25-0.33 s this way against 3.5-4.1 s with the listing job
+    (local[4] on a 4-vCPU VM); on a remote object store the serial
+    stats would grow with N."""
+    reader = spark.read.schema(schema)
+    if len(paths) <= int(spark.conf.get(DISCOVERY_THRESHOLD)):
+        return reader.parquet(*paths)
+    with _DISCOVERY_LOCK:
+        prior = spark.conf.get(DISCOVERY_THRESHOLD, None)
+        spark.conf.set(DISCOVERY_THRESHOLD, str(len(paths)))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            if prior is None:
+                spark.conf.unset(DISCOVERY_THRESHOLD)
+            else:
+                spark.conf.set(DISCOVERY_THRESHOLD, prior)
+
+
 def read_dvs(
     spark: SparkSession, table_dir: str, dv_dirs: Iterable[str]
 ) -> DataFrame:
@@ -88,8 +129,8 @@ def read_dvs(
     dirs = sorted(set(dv_dirs))
     if not dirs:
         return spark.createDataFrame([], DV_SCHEMA)
-    return spark.read.schema(DV_SCHEMA).parquet(
-        *[os.path.join(table_dir, d) for d in dirs]
+    return read_listed(
+        spark, DV_SCHEMA, [os.path.join(table_dir, d) for d in dirs]
     )
 
 

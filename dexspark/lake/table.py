@@ -363,6 +363,28 @@ class LakeTable:
             v for c, op, v in (filters or []) if op == "=" and c == m.bucket_key
         ]
 
+    def _key_hashes(self, m: mf.Manifest, vals: list[Any]) -> list[int]:
+        """Spark's ``xxhash64`` of each value cast to the bucket key's
+        type, in order: the raw hashes that bucket placement takes
+        ``pmod`` of (the Python side never re-implements xxhash64). The
+        values enter as parameters of an inline ``VALUES`` relation,
+        and Spark folds a projection over a local relation on the
+        driver, so no Spark job runs."""
+        ktype = next(
+            f.dataType
+            for f in self.schema(m.version).fields
+            if f.name == m.bucket_key
+        )
+        rel = self.spark.sql(
+            "SELECT * FROM VALUES " + ", ".join(["(?)"] * len(vals))
+            + " AS t(v)",
+            args=vals,
+        )
+        return [
+            int(r[0])
+            for r in rel.select(F.xxhash64(F.col("v").cast(ktype))).collect()
+        ]
+
     def _buckets_for_keys(
         self, m: mf.Manifest, key_vals: list[Any]
     ) -> dict[int, int] | None:
@@ -373,20 +395,15 @@ class LakeTable:
         prunable iff ``f.bucket != result[f.layout]`` — exact under
         the file's OWN layout, which is what makes point lookups keep
         pruning mid-migration. Bucket placement is
-        pmod(xxhash64(key), n): the raw hash comes from a one-row
-        Spark job (the Python side never re-implements xxhash64) and
-        the per-layout residue is plain ``%`` (Python ``%`` and Spark
-        ``pmod`` agree for positive moduli). Two DIFFERENT required
-        key values make the conjunction unsatisfiable → {} (scan
-        nothing)."""
+        pmod(xxhash64(key), n): the raw hash comes from ``_key_hashes``
+        on the driver (no Spark job) and the per-layout residue is
+        plain ``%`` (Python ``%`` and Spark ``pmod`` agree for positive
+        moduli). Two DIFFERENT required key values make the
+        conjunction unsatisfiable → {} (scan nothing)."""
         vals = [v for v in key_vals if v is not None]
         if not vals:
             return None
-        ktype = next(
-            f.dataType
-            for f in self.schema(m.version).fields
-            if f.name == m.bucket_key
-        )
+
         def _same(a: Any, b: Any) -> bool:
             # values are canonicalized to the column's type upstream,
             # so direct equality is sound (5 vs 5.0 already unified) —
@@ -396,14 +413,7 @@ class LakeTable:
 
         if any(not _same(v, vals[0]) for v in vals[1:]):
             return {}  # x = 'a' AND x = 'b'
-        row = (
-            self.spark.range(1)
-            .select(
-                F.xxhash64(F.lit(vals[0]).cast(ktype)).alias("h")
-            )
-            .first()
-        )
-        h = int(row["h"])
+        (h,) = self._key_hashes(m, vals[:1])
         layouts = {f.layout for f in m.files} | {m.num_buckets}
         return {n: h % n for n in layouts}
 
@@ -437,34 +447,16 @@ class LakeTable:
     def buckets_for_values(self, values: list[Any]) -> set[int]:
         """Buckets that can hold rows whose bucket key equals ANY of
         ``values`` — the IN/union shape (``_buckets_for_keys`` handles
-        the ``=``-conjunction shape). One tiny Spark job over the
-        VALUE LIST (so the Python side never re-implements Spark's
-        xxhash64), never the data. Callers pair this with
+        the ``=``-conjunction shape). The hashes come from
+        ``_key_hashes`` over the VALUE LIST on the driver, never the
+        data, and no Spark job runs. Callers pair this with
         ``read(buckets=...)`` + a row-level ``isin`` filter to get a
         single bucket-pruned scan for a multi-key lookup."""
         m = self.manifest()
         vals = [v for v in values if v is not None]
         if not vals:
             return set()
-        ktype = next(
-            f.dataType
-            for f in self.schema(m.version).fields
-            if f.name == m.bucket_key
-        )
-        rows = (
-            self.spark.createDataFrame(
-                [(v,) for v in vals],
-                StructType([StructField("v", ktype, True)]),
-            )
-            .select(
-                F.pmod(F.xxhash64(F.col("v")), F.lit(m.num_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return {int(r["b"]) for r in rows}
+        return {h % m.num_buckets for h in self._key_hashes(m, vals)}
 
     def _bloom_keep(
         self,
@@ -843,7 +835,10 @@ class LakeTable:
         with_positions: bool = False,
     ) -> DataFrame:
         """Union the given files, each group read under its writer
-        schema and projected/cast to the current schema.
+        schema and projected/cast to the current schema. The file list
+        is the manifest's: each relation is built by
+        ``lake_dv.read_listed``, so building the scan runs no Spark
+        listing job however many files it covers.
 
         Files carrying a deletion vector (lake/dv.py) have their
         recorded positions anti-joined out here — EVERY consumer
@@ -870,7 +865,7 @@ class LakeTable:
                 __import__("json").loads(m.schemas[sid])
             )
             writer_sys = StructType(list(writer_schema.fields) + sys_fields)
-            df = self.spark.read.schema(writer_sys).parquet(*paths)
+            df = lake_dv.read_listed(self.spark, writer_sys, paths)
             if need_pos:
                 # attach file identity BEFORE the align projection —
                 # _metadata only resolves on the file-source relation

@@ -18,3 +18,12 @@ def tmp_table_dir():
     d = tempfile.mkdtemp(prefix="dexspark_tbl_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs()`` reads the scheduler's next job id, the counter
+    perfbench's tracer reads too: the difference of two calls is the
+    number of Spark jobs scheduled between them."""
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    return lambda: int(sched.nextJobId())

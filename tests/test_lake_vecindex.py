@@ -15,6 +15,11 @@ Invariants under test:
 5. NULL embeddings are not indexed; nulling an embedding retracts.
 """
 
+import datetime as dt
+import os
+import re
+from decimal import Decimal
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import _parse_datatype_string
@@ -177,6 +182,37 @@ def test_buckets_for_values_matches_placement(spark, tmp_path_factory):
     assert got.count() == want.count() > 0
     assert idx.buckets_for_values([]) == set()
     assert idx.buckets_for_values([None]) == set()
+
+    # hash parity per key type: the bucket either helper names for a
+    # key is the _bucket= directory the writer put that key's row in
+    keys = {
+        "string": [f"k{i}" for i in range(12)],
+        "int": list(range(-6, 6)),
+        "bigint": [i * 10**12 for i in range(-6, 6)],
+        "date": [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(12)],
+        "timestamp": [
+            dt.datetime(2024, 1, 1) + dt.timedelta(hours=7 * i) for i in range(12)
+        ],
+        "decimal(12,3)": [Decimal(i) / 8 for i in range(-6, 6)],
+    }
+    for ktype, vals in keys.items():
+        schema = _parse_datatype_string(f"k {ktype}, v int")
+        t = LakeTable.create(spark, str(d / f"keys_{ktype[:7]}"), schema, "k", 4)
+        t.append(spark.createDataFrame([(v, i) for i, v in enumerate(vals)], schema))
+        m = t.manifest()
+        placed = {
+            r.k: int(re.search(r"/_bucket=(\d+)/", r.f).group(1))
+            for r in spark.read.parquet(
+                *[os.path.join(t.table_dir, f.path) for f in m.files]
+            )
+            .select("k", F.col("_metadata.file_path").alias("f"))
+            .collect()
+        }
+        assert len(placed) == len(vals), ktype
+        for k, b in placed.items():
+            assert t.buckets_for_values([k]) == {b}, (ktype, k)
+            assert t._buckets_for_keys(m, [k]) == {4: b}, (ktype, k)
+        assert t.buckets_for_values(list(placed)) == set(placed.values())
 
 
 def test_maintenance_only_source_version_advances_ledger(

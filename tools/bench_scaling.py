@@ -111,8 +111,10 @@ def run_at(cores: int, n_events: int, trials: int) -> dict:
             flush=True,
         )
     spark.stop()
-    best = min(times)
-    best_cpu = min(cpu_secs)
+    # CPU seconds of the best-wall trial, so both figures describe one run
+    best_i = min(range(trials), key=times.__getitem__)
+    best = times[best_i]
+    best_cpu = cpu_secs[best_i]
     return {
         "cores": cores,
         "sec": round(best, 3),
