@@ -23,7 +23,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from dexspark.lake.table import _WIDENINGS, LakeTable, _align
+from dexspark.lake.table import _WIDENINGS, LakeTable, _align, _quote
 
 
 def changed_buckets(
@@ -126,20 +126,25 @@ def snapshot_diff(
     lake/matview.py); the default single-image shape cannot say what a
     U row used to be."""
     non_keys = [c for c in payload if c not in key_cols]
+
+    def _col(name: str):
+        # payload names may need SQL quoting (spaces, dots, backticks)
+        return F.col(_quote(name))
+
     o = old.select(
-        *[F.col(c).alias(f"_o_{c}") for c in payload],
-        *[F.col(c) for c in key_cols],
+        *[_col(c).alias(f"_o_{c}") for c in payload],
+        *[_col(c) for c in key_cols],
     )
     n = new.select(
-        *[F.col(c).alias(f"_n_{c}") for c in payload],
-        *[F.col(c) for c in key_cols],
+        *[_col(c).alias(f"_n_{c}") for c in payload],
+        *[_col(c) for c in key_cols],
     )
     j = o.join(n, on=key_cols, how="full_outer")
 
-    in_old = F.col(f"_o_{key_cols[0]}").isNotNull()
-    in_new = F.col(f"_n_{key_cols[0]}").isNotNull()
-    same = F.struct(*[F.col(f"_o_{c}") for c in non_keys]).eqNullSafe(
-        F.struct(*[F.col(f"_n_{c}") for c in non_keys])
+    in_old = _col(f"_o_{key_cols[0]}").isNotNull()
+    in_new = _col(f"_n_{key_cols[0]}").isNotNull()
+    same = F.struct(*[_col(f"_o_{c}") for c in non_keys]).eqNullSafe(
+        F.struct(*[_col(f"_n_{c}") for c in non_keys])
     )
 
     op = (
@@ -149,10 +154,10 @@ def snapshot_diff(
     )
     if images:
         old_img = F.when(
-            in_old, F.struct(*[F.col(f"_o_{c}").alias(c) for c in payload])
+            in_old, F.struct(*[_col(f"_o_{c}").alias(c) for c in payload])
         )
         new_img = F.when(
-            in_new, F.struct(*[F.col(f"_n_{c}").alias(c) for c in payload])
+            in_new, F.struct(*[_col(f"_n_{c}").alias(c) for c in payload])
         )
         return (
             j.withColumn(op_col, op)
@@ -166,7 +171,7 @@ def snapshot_diff(
         )
     side = F.when(in_new, F.lit("n")).otherwise(F.lit("o"))
     out_cols = [
-        F.when(side == "n", F.col(f"_n_{c}")).otherwise(F.col(f"_o_{c}")).alias(c)
+        F.when(side == "n", _col(f"_n_{c}")).otherwise(_col(f"_o_{c}")).alias(c)
         for c in payload
     ]
     return (

@@ -33,11 +33,14 @@ from typing import Any, Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     StructField,
     StructType,
 )
@@ -76,6 +79,8 @@ TAGS_DIR = "_tags"
 #   their snapshots.
 SYS_LSN = "_applied_lsn"
 SYS_DELETED = "_deleted"
+# the tombstone filter readers apply, as one SQL expression string
+_LIVE = f"NOT coalesce({SYS_DELETED}, false)"
 
 # widenings allowed by evolve_schema (Iceberg-compatible set)
 _WIDENINGS = {
@@ -367,23 +372,23 @@ class LakeTable:
         """Spark's ``xxhash64`` of each value cast to the bucket key's
         type, in order: the raw hashes that bucket placement takes
         ``pmod`` of (the Python side never re-implements xxhash64). The
-        values enter as parameters of an inline ``VALUES`` relation,
-        and Spark folds a projection over a local relation on the
-        driver, so no Spark job runs."""
+        values enter as parameters of an inline ``VALUES`` relation
+        and the hash is computed in that same SQL statement, so the
+        whole lookup is one statement and one collect: Spark folds a
+        projection over a local relation on the driver, so no Spark
+        job runs, and no Column is built."""
         ktype = next(
             f.dataType
             for f in self.schema(m.version).fields
             if f.name == m.bucket_key
         )
         rel = self.spark.sql(
-            "SELECT * FROM VALUES " + ", ".join(["(?)"] * len(vals))
+            f"SELECT xxhash64(CAST(v AS {_sql_type(ktype)})) FROM VALUES "
+            + ", ".join(["(?)"] * len(vals))
             + " AS t(v)",
             args=vals,
         )
-        return [
-            int(r[0])
-            for r in rel.select(F.xxhash64(F.col("v").cast(ktype))).collect()
-        ]
+        return [int(r[0]) for r in rel.collect()]
 
     def _buckets_for_keys(
         self, m: mf.Manifest, key_vals: list[Any]
@@ -745,16 +750,12 @@ class LakeTable:
         else:
             out = self._scan_files(clean_files, m, current_sys)
         if not include_system:
-            out = out.filter(
-                ~F.coalesce(F.col(SYS_DELETED), F.lit(False))
-            ).drop(SYS_LSN, SYS_DELETED)
+            out = out.filter(_LIVE).drop(SYS_LSN, SYS_DELETED)
         if filters:
             out = out.filter(lake_stats.residual_condition(filters))
         if columns is not None:
-            out = out.select(
-                *columns,
-                *([SYS_LSN, SYS_DELETED] if include_system else []),
-            )
+            keep = [*columns, *([SYS_LSN, SYS_DELETED] if include_system else [])]
+            out = out.selectExpr(*[_quote(c) for c in keep])
         return out
 
     def count_rows(
@@ -815,9 +816,7 @@ class LakeTable:
             df = parts[0]
             for p in parts[1:]:
                 df = df.unionByName(p)
-            scanned = df.filter(
-                ~F.coalesce(F.col(SYS_DELETED), F.lit(False))
-            ).count()
+            scanned = df.filter(_LIVE).count()
         total = meta_total + scanned
         if detail:
             return {
@@ -910,23 +909,25 @@ class LakeTable:
         map-side partial agg, no window sort (see cdc/dedup.py for the
         measured rationale). Delete tombstones win like any row and
         are filtered by the caller, so a late lower-LSN update cannot
-        resurrect a deleted key."""
+        resurrect a deleted key.
+
+        The packed struct is one SQL-expression aggregate and the
+        unpack one ``selectExpr``, so building the resolve costs a
+        few driver↔JVM round trips plus about one per column, where a
+        Column per field cost several each."""
         keys = (m.properties.get("merge_keys") or m.bucket_key).split(",")
         others = [c for c in df.columns if c not in keys]
-        packed = F.max(
-            F.struct(
-                F.col(SYS_LSN).alias("_l"),
-                *[F.col(c).alias(c) for c in others],
-            )
-        ).alias("_w")
+        packed = ", ".join(
+            [f"{SYS_LSN} AS _l"] + [_quote(c) for c in others]
+        )
         return (
-            df.groupBy(*keys)
-            .agg(packed)
-            .select(
+            df.groupBy(*[_quote(k) for k in keys])
+            .agg(F.expr(f"max(struct({packed})) AS _w"))
+            .selectExpr(
                 *[
-                    F.col(f"_w.{f.name}").alias(f.name)
+                    f"_w.{_quote(f.name)} AS {_quote(f.name)}"
                     if f.name in others
-                    else F.col(f.name)
+                    else _quote(f.name)
                     for f in current_sys.fields
                 ]
             )
@@ -3390,6 +3391,27 @@ class LakeTable:
         return self._transact(attempt)
 
 
+def _quote(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, inner
+    backticks doubled, so names holding spaces, dots or backticks
+    resolve as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: DataType) -> str:
+    """``dt`` as Spark SQL type text, what ``CAST(... AS <type>)``
+    parses; nested struct field names are quoted."""
+    if isinstance(dt, StructType):
+        return "STRUCT<" + ", ".join(
+            f"{_quote(f.name)}: {_sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, ArrayType):
+        return f"ARRAY<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"MAP<{_sql_type(dt.keyType)}, {_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def _align(
     df: DataFrame,
     schema: StructType,
@@ -3407,19 +3429,35 @@ def _align(
     files written before the re-add instead of resurrecting the
     dropped data. Fields absent from the maps (system columns,
     pre-upgrade schemas) fall back to by-name — the previous
-    behavior, so tables without the maps are unaffected."""
+    behavior, so tables without the maps are unaffected.
+
+    The projection is SQL text for one ``selectExpr``: a column whose
+    source already has the target name and type is a bare quoted
+    name, others a ``CAST``/alias. When every column is already in
+    place the relation itself is returned. Every lake read aligns
+    each file group through here, and a PySpark Column costs several
+    driver↔JVM round trips, so a per-column ``F.col(...).cast(...)``
+    made building a read cost hundreds of round trips; this costs
+    about one per column, and none for a file already in the target
+    schema."""
     inv_src = (
         {fid: n for n, fid in src_ids.items()} if src_ids else None
     )
-    cols = []
-    have = set(df.columns)
+    src_fields = df.schema.fields
+    src_types = {f.name: f.dataType for f in src_fields}
+    exprs = []
     for f in schema.fields:
         src = f.name
         if inv_src is not None and tgt_ids is not None and f.name in tgt_ids:
             src = inv_src.get(tgt_ids[f.name])  # None = not in writer
-        if src is not None and src in have:
-            cols.append(F.col(src).cast(f.dataType).alias(f.name))
+        if src == f.name and src_types.get(src) == f.dataType:
+            exprs.append(_quote(src))
         else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    cols.extend(F.col(k) for k in keep)
-    return df.select(*cols)
+            val = _quote(src) if src in src_types else "NULL"
+            exprs.append(
+                f"CAST({val} AS {_sql_type(f.dataType)}) AS {_quote(f.name)}"
+            )
+    exprs.extend(_quote(k) for k in keep)
+    if exprs == [_quote(f.name) for f in src_fields]:
+        return df
+    return df.selectExpr(*exprs)

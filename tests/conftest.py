@@ -1,5 +1,6 @@
 import shutil
 import tempfile
+import threading
 
 import pytest
 
@@ -27,3 +28,25 @@ def spark_jobs(spark):
     number of Spark jobs scheduled between them."""
     sched = spark.sparkContext._jsc.sc().dagScheduler()
     return lambda: int(sched.nextJobId())
+
+
+@pytest.fixture()
+def py4j_calls(spark, monkeypatch):
+    """``py4j_calls()`` reads how many commands this thread has sent
+    to the JVM since the fixture started: the difference of two calls
+    is the number of driver↔JVM round trips between them. Releases of
+    JVM objects are not counted: py4j's finalizer thread sends those
+    on its own schedule."""
+    from py4j.clientserver import ClientServerConnection
+
+    me = threading.get_ident()
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return lambda: sent[0]

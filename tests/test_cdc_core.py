@@ -115,6 +115,28 @@ def test_text_check_modes_agree(spark):
     assert "malformed_text" in expr.values() and None in expr.values()
 
 
+def test_ts_check_join_modes_agree(spark):
+    """``ts_check_join="shuffle"``, the escape hatch for a batch whose
+    key set outgrows the broadcast budget, must flag exactly the rows
+    the default broadcast join flags, with the same reasons."""
+    from dexspark.cdc.validate import flag_events
+
+    log = gen_change_log(spark, 4000, bad_role_pct=5, ts_violation_pct=3)
+
+    def verdicts(mode):
+        flagged = flag_events(log, ValidationConfig(ts_check_join=mode))
+        return sorted(
+            flagged.select("lsn", "conv_id", "turn_idx", REASON_COL).collect(),
+            key=lambda r: (r[0], r[1], r[2], r[3] or ""),
+        )
+
+    broadcast, shuffle = verdicts("broadcast"), verdicts("shuffle")
+    assert len(broadcast) == 4000
+    assert broadcast == shuffle
+    reasons = [r[REASON_COL] for r in broadcast]
+    assert reasons.count("ts_not_monotonic") > 0 and "bad_role" in reasons
+
+
 def test_validate_required_fields_and_ops(spark):
     df = spark.createDataFrame(
         [
