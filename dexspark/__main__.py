@@ -19,6 +19,8 @@ Subcommands:
 - ``compact`` — bin-pack small files / migrate stale-schema files
   (also folds merge-on-read delta files back into base).
 - ``expire``  — expire old snapshots and vacuum unreferenced files.
+- ``maintain`` — policy-driven compaction from manifest metadata; run
+  it after ``replay --strategy mor`` to fold the delta files.
 - ``mirror``  — subscribe a downstream table to an upstream table's
   change feed (per-snapshot diffs, exactly-once, resumable).
 - ``delete``  — predicate DELETE (retention / right-to-be-forgotten):
@@ -105,8 +107,6 @@ def cmd_replay(args) -> int:
         max_files_per_trigger=args.max_files_per_trigger or None,
         log_format=args.log_format,
         strategy=args.strategy,
-        compact_every=args.compact_every or None,
-        compact_delta_depth=args.compact_delta_depth or None,
         mode=args.mode,
     )
     results = replay.run_available()
@@ -173,7 +173,6 @@ def cmd_replay_routed(args) -> int:
         log_format=args.log_format,
         strategy=args.strategy,
         concurrency=args.concurrency,
-        compact_every=args.compact_every or None,
     )
     results = replay.run_available()
     for r in results:
@@ -842,14 +841,8 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument(
         "--strategy", choices=["cow", "mor"], default="cow",
         help="merge mode: cow rewrites affected buckets; mor appends "
-             "O(batch) delta files (pair with --compact-every)",
-    )
-    r.add_argument("--compact-every", type=int, default=0)
-    r.add_argument(
-        "--compact-delta-depth", type=int, default=0,
-        help="compact when any bucket holds this many outstanding MOR "
-             "delta files (bounds read-time resolve depth; tracks read "
-             "amplification instead of batch count)",
+             "O(batch) delta files (fold them with `dexspark maintain` "
+             "once the replay has drained the log)",
     )
     r.add_argument(
         "--mode", choices=["scd1", "scd2"], default="scd1",
@@ -885,11 +878,6 @@ def main(argv: list[str] | None = None) -> int:
         "--concurrency", type=int, default=1,
         help="destinations applied at once per micro-batch (driver "
              "threads; destinations never share state, so >1 is safe)",
-    )
-    rr.add_argument(
-        "--compact-every", type=int, default=0,
-        help="compact every destination after this many applied "
-             "micro-batches (pair with --strategy mor)",
     )
     rr.set_defaults(fn=cmd_replay_routed)
 

@@ -331,7 +331,6 @@ class RoutedCdcStreamReplay:
         log_format: str = "parquet",
         strategy: str = "cow",
         concurrency: int = 1,
-        compact_every: int | None = None,
         catalog=None,
     ):
         from dexspark.streaming.replay import CdcStreamReplay
@@ -354,11 +353,6 @@ class RoutedCdcStreamReplay:
         self.log_format = log_format
         self.strategy = strategy
         self.concurrency = concurrency
-        # every N applied micro-batches, compact EVERY destination —
-        # the scheduled OPTIMIZE a long-running routed MOR ingest
-        # needs (each destination accumulates its own delta files)
-        self.compact_every = compact_every
-        self._applied_since_compact = 0
         # batch-atomic cross-table visibility: pins publish after each
         # fully-applied micro-batch (see apply_routed's catalog note);
         # a restart mid-fan-out leaves the previous consistent family
@@ -392,17 +386,6 @@ class RoutedCdcStreamReplay:
             },
         }
         self.results.append(res)
-        if self.compact_every and not all(
-            r.get("skipped") for r in res["routes"].values()
-        ):
-            self._applied_since_compact += 1
-            if self._applied_since_compact >= self.compact_every:
-                self._applied_since_compact = 0
-                for route in sorted(self.tables):
-                    info = self.tables[route].compact()
-                    info["trigger"] = "batch_count"
-                    info["route"] = route
-                    self.results.append(info)
 
     def run_available(self) -> list[dict[str, Any]]:
         from dexspark.sources.changelog import read_log_stream

@@ -9,21 +9,16 @@ split into a rejects DataFrame (with a machine-readable reason) that
 the caller quarantines and counts in lineage.
 
 All checks are vectorized: enum / null / text well-formedness checks
-are pure Catalyst expressions (whole-stage-codegen'd) by default; the
-text check can instead run as an Arrow pandas UDF
-(``ValidationConfig.text_check="arrow"`` — batch-vectorized, never
-per-row Python — the extension seam for checks that genuinely need
-Python); the ts-monotonicity check is a running-max-per-conv_id
-aggregate joined back broadcast-style.
+are pure Catalyst expressions (whole-stage-codegen'd, no Python worker
+on the hot path); the ts-monotonicity check is a running-max-per-
+conv_id aggregate joined back broadcast-style.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import BooleanType
 
 REASON_COL = "reject_reason"
 
@@ -58,11 +53,6 @@ class ValidationConfig:
     ts_col: str = "ts"
     check_ts_monotonic: bool = True
     max_text_bytes: int = 1 << 20
-    # "expr" (default): text well-formedness as pure Catalyst
-    # expressions, fused into the codegen span with the other checks.
-    # "arrow": the pandas-UDF variant — same verdicts (pinned by
-    # test), kept as the seam for checks that genuinely need Python.
-    text_check: str = "expr"
     # how the per-turn watermark joins back onto the event stream for
     # the ts-monotonicity check. "broadcast" (default): the watermark
     # table is O(distinct (conv, turn) in the batch) — bounded by
@@ -71,22 +61,11 @@ class ValidationConfig:
     # shuffling for this check. "shuffle": plain join, for the
     # pathological batch whose key set outgrows the broadcast budget.
     ts_check_join: str = "broadcast"
-    extra: dict = field(default_factory=dict)
-
-
-@F.pandas_udf(BooleanType())
-def _text_wellformed(text: pd.Series) -> pd.Series:
-    """Arrow-vectorized text check: non-empty after strip, valid UTF-8
-    encodable, no NUL bytes. (Per input_hint: pandas/Arrow UDF, no
-    per-row Python UDF.)"""
-    s = text.fillna("")
-    stripped = s.str.strip()
-    return (stripped.str.len() > 0) & ~s.str.contains("\x00", regex=False)
 
 
 # every character Python's str.strip() treats as whitespace (the chars
 # for which str.isspace() is True) — so the expression check below
-# agrees with the Arrow UDF character-for-character
+# agrees with Python's str.strip() character-for-character
 _PY_WHITESPACE = "".join(
     # U+3000 IDEOGRAPHIC SPACE is the highest whitespace codepoint
     chr(c) for c in range(0x3001) if chr(c).isspace()
@@ -94,20 +73,16 @@ _PY_WHITESPACE = "".join(
 
 
 def text_wellformed_expr(col: F.Column) -> F.Column:
-    """Pure-Catalyst equivalent of ``_text_wellformed``: non-empty
-    after stripping Python-whitespace, no NUL bytes. NULL text is
-    malformed (returns False), matching the UDF's ``fillna("")``.
+    """Text well-formedness as pure Catalyst: non-empty after
+    stripping Python-whitespace, no NUL bytes; NULL text is malformed
+    (returns False).
 
-    This is the default hot-path check (`ValidationConfig.text_check
-    = "expr"`): it fuses into the same whole-stage-codegen span as the
-    enum/null checks, where the pandas UDF forces an Arrow
+    It fuses into the same whole-stage-codegen span as the enum/null
+    checks, where a pandas UDF would force an Arrow
     serialize→Python→deserialize round-trip of the full text column
-    for every batch — measurable at 16M-event scale. The UDF variant
-    (`text_check="arrow"`) remains as the extension seam for checks
-    that genuinely need Python (semantic classifiers, tokenizer
-    round-trips); `tests/test_cdc_core.py::test_text_check_modes_agree`
-    pins the two modes to identical verdicts across the whitespace/NUL
-    edge battery.
+    for every batch — measurable at 16M-event scale.
+    A test in `tests/test_cdc_core.py` pins it to a pandas reference
+    (``str.strip``) across the whitespace/NUL edge battery.
     """
     stripped_nonempty = F.coalesce(
         F.length(F.btrim(col, F.lit(_PY_WHITESPACE))), F.lit(0)
@@ -177,13 +152,7 @@ def flag_events(events: DataFrame, cfg: ValidationConfig | None = None) -> DataF
                 "text_too_large",
             )
         )
-        if cfg.text_check not in ("expr", "arrow"):
-            raise ValueError(f"unknown text_check mode: {cfg.text_check!r}")
-        wellformed = (
-            text_wellformed_expr(F.col(cfg.text_col))
-            if cfg.text_check == "expr"
-            else _text_wellformed(F.col(cfg.text_col))
-        )
+        wellformed = text_wellformed_expr(F.col(cfg.text_col))
         checks.append((~is_delete & ~wellformed, "malformed_text"))
 
     reason = F.when(checks[0][0], F.lit(checks[0][1]))

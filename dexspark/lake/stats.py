@@ -31,6 +31,8 @@ Deliberately conservative choices:
 from __future__ import annotations
 
 import datetime as _dt
+import functools
+import operator
 from typing import Any
 
 from pyspark.sql import Column, functions as F
@@ -48,7 +50,14 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-OPS = ("=", "<", "<=", ">", ">=")
+_COMPARE = {
+    "=": operator.eq,
+    "<": operator.lt,
+    "<=": operator.le,
+    ">": operator.gt,
+    ">=": operator.ge,
+}
+OPS = tuple(_COMPARE)
 
 _NUMERIC = (ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
 
@@ -247,19 +256,22 @@ def file_may_match(
     return True
 
 
+def _quote(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backtick-quoted, inner
+    backticks doubled, so names holding spaces, dots or backticks
+    resolve as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def residual_condition(filters: list[tuple[str, str, Any]]) -> Column:
     """The exact row-level conjunction; always applied after the scan
     so pruning never changes results (and Catalyst still pushes it
     into the parquet reader for row-group skipping on the files that
-    survive)."""
-    cond = F.lit(True)
-    for col, op, v in filters:
-        c = F.col(col)
-        cond = cond & {
-            "=": c == v,
-            "<": c < v,
-            "<=": c <= v,
-            ">": c > v,
-            ">=": c >= v,
-        }[op]
-    return cond
+    survive). ``filters`` must be non-empty. Each filter builds only
+    its own comparison, and its column comes from ``F.expr`` (a third
+    of ``F.col``'s JVM round trips), quoted so that any top-level name
+    resolves as one column."""
+    return functools.reduce(
+        operator.and_,
+        (_COMPARE[op](F.expr(_quote(col)), v) for col, op, v in filters),
+    )

@@ -52,6 +52,7 @@ from dexspark.lake import layout as lake_layout
 from dexspark.lake import manifest as mf
 from dexspark.lake import stats as lake_stats
 from dexspark.lake import zorder as lake_zorder
+from dexspark.lake.stats import _quote
 
 BUCKET_COL = "_bucket"
 # branch (write-audit-publish) layout: each branch is a manifest
@@ -3389,13 +3390,6 @@ class LakeTable:
             return new_sid
 
         return self._transact(attempt)
-
-
-def _quote(name: str) -> str:
-    """``name`` as a Spark SQL identifier: backtick-quoted, inner
-    backticks doubled, so names holding spaces, dots or backticks
-    resolve as one column."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _sql_type(dt: DataType) -> str:

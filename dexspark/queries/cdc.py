@@ -89,8 +89,9 @@ def cdc_stream_replay_mor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming × merge-on-read composition under the hard oracle:
     the same tail / checkpoint / mid-stream-restart harness as
     ``cdc_stream_replay_final_state``, but every micro-batch commits
-    O(batch) delta files and the replay auto-compacts every 2 applied
-    batches (the production pairing for a long-running MOR ingest).
+    O(batch) delta files and the replay's maintain policy compacts any
+    bucket that holds 2 outstanding deltas (the production pairing for
+    a long-running MOR ingest).
     Crossing a restart AND the base/delta boundary must still land on
     the batch oracle's exact final state."""
     from dexspark.sources.changelog import log_schema as mk_log_schema
@@ -115,7 +116,8 @@ def cdc_stream_replay_mor_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return CdcStreamReplay(
             spark, table, log_dir + "/*", cp, mk_log_schema(),
             max_files_per_trigger=2, batch_id_prefix="sm",
-            strategy="mor", compact_every=2,
+            strategy="mor",
+            maintain_policy={"compact_delta_depth": 2},
         )
 
     replayer().run_available()

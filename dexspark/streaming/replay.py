@@ -51,8 +51,6 @@ class CdcStreamReplay:
         max_files_per_trigger: int | None = None,
         batch_id_prefix: str = "stream",
         log_format: str = "parquet",
-        compact_every: int | None = None,
-        compact_delta_depth: int | None = None,
         cfg_provider: Callable[[], ValidationConfig] | None = None,
         strategy: str = "cow",
         views: list[Any] | None = None,
@@ -84,22 +82,9 @@ class CdcStreamReplay:
         self.max_files_per_trigger = max_files_per_trigger
         self.batch_id_prefix = batch_id_prefix
         self.log_format = log_format
-        # every N applied batches, bin-pack small files (the scheduled
-        # OPTIMIZE a long-running ingest daemon needs; COW merges keep
-        # affected buckets at one file, but quarantine appends and
-        # schema evolution fragment over time)
-        self.compact_every = compact_every
-        # merge-on-read read-amplification bound: compact as soon as any
-        # bucket accumulates this many outstanding DELTA files. Unlike
-        # compact_every (a batch counter), this tracks what actually
-        # drives read cost — the per-bucket resolve depth — so a hot
-        # bucket triggers compaction early and a cold table never
-        # compacts needlessly. Metadata-only check (manifest scan, no
-        # data I/O) per micro-batch.
-        self.compact_delta_depth = compact_delta_depth
         # merge mode per micro-batch: "mor" makes each commit O(batch)
-        # (delta append) — pair with compact_every so read-time resolve
-        # stays bounded on a long-running ingest
+        # (delta append) — pair with maintain_policy so read-time
+        # resolve stays bounded on a long-running ingest
         self.strategy = strategy
         # downstream derived-table subscriptions — anything with a
         # ``refresh(src) -> info | None`` method (lake/matview.py
@@ -119,18 +104,11 @@ class CdcStreamReplay:
             raise ValueError("scd2 mode supports neither 'mor' nor salting")
         self.mode = mode
         # kwargs for LakeTable.maintain(), evaluated after every
-        # applied micro-batch — the POLICY form of the two legacy
-        # knobs above (file-count + delta-depth + dv-ratio + stale-
-        # schema triggers, optional expiry/vacuum, all decided from
-        # the manifest with zero data I/O). Subsumes compact_every /
-        # compact_delta_depth; passing it alongside them raises.
-        if maintain_policy is not None and (compact_every or compact_delta_depth):
-            raise ValueError(
-                "maintain_policy subsumes compact_every/"
-                "compact_delta_depth — pass one or the other"
-            )
+        # applied micro-batch: file-count, delta-depth, dv-ratio and
+        # stale-schema triggers plus optional expiry/vacuum, all
+        # decided from the manifest with zero data I/O. None never
+        # compacts; a batch job compacts with ``dexspark maintain``.
         self.maintain_policy = maintain_policy
-        self._applied_since_compact = 0
         self.results: list[dict[str, Any]] = []
 
     @staticmethod
@@ -150,15 +128,6 @@ class CdcStreamReplay:
             pass
         with open(p) as fh:
             return fh.read().strip()
-
-    def _delta_depth(self) -> int:
-        """Max outstanding delta files in any one bucket — the
-        read-time resolve depth. Manifest-only, no data I/O."""
-        per_bucket: dict[int, int] = {}
-        for f in self.table.manifest().files:
-            if f.kind == "delta":
-                per_bucket[f.bucket] = per_bucket.get(f.bucket, 0) + 1
-        return max(per_bucket.values(), default=0)
 
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
         import time
@@ -201,13 +170,10 @@ class CdcStreamReplay:
             "rows_per_sec": round(rows / wall, 1) if wall > 0 else None,
         }
         self.results.append(res)
-        if res.get("skipped"):
-            # still refresh: a crash BETWEEN the table commit and the
-            # view refresh leaves the view one batch behind — the
-            # replayed (skipped) batch is where it catches up
-            self._refresh_views()
-            return
-        if self.maintain_policy is not None:
+        # a skipped (redelivered) batch still refreshes: a crash BETWEEN
+        # the table commit and the view refresh leaves the view one
+        # batch behind, and the redelivery is where it catches up
+        if not res.get("skipped") and self.maintain_policy is not None:
             info = self.table.maintain(**self.maintain_policy)
             if (
                 info["buckets_triggered"]
@@ -215,26 +181,6 @@ class CdcStreamReplay:
                 or "vacuum" in info
             ):
                 info["trigger"] = "policy"
-                self.results.append(info)
-            self._refresh_views()
-            return
-        if self.compact_delta_depth and (
-            self._delta_depth() >= self.compact_delta_depth
-        ):
-            info = self.table.compact()
-            info["trigger"] = "delta_depth"
-            self.results.append(info)
-            self._applied_since_compact = 0
-            self._refresh_views()
-            return
-        if self.compact_every:
-            self._applied_since_compact += 1
-            if self._applied_since_compact >= self.compact_every:
-                self._applied_since_compact = 0
-                # skipped runs are recorded too — "checked, nothing
-                # fragmented" is operational signal
-                info = self.table.compact()
-                info["trigger"] = "batch_count"
                 self.results.append(info)
         self._refresh_views()
 

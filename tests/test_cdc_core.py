@@ -1,7 +1,9 @@
 """CDC core: dedup, validation quarantine, full replay vs oracle,
 exactly-once, skew salting."""
 
+import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.sql.types import BooleanType
 
 from dexspark.cdc.apply import apply_changes
 from dexspark.cdc.dedup import dedupe_latest
@@ -77,13 +79,20 @@ def test_validate_quarantine_reasons(spark):
     )
 
 
+@F.pandas_udf(BooleanType())
+def _text_wellformed(text: pd.Series) -> pd.Series:
+    """The reference text check, as an Arrow pandas UDF: non-empty
+    after ``str.strip()``, no NUL bytes, NULL is malformed."""
+    s = text.fillna("")
+    return (s.str.strip().str.len() > 0) & ~s.str.contains("\x00", regex=False)
+
+
 def test_text_check_modes_agree(spark):
-    """The codegen text check (default) and the Arrow pandas-UDF
-    variant must produce identical verdicts — including NULLs, every
-    Python-whitespace-only string, NUL bytes, and unicode payloads.
-    The expr mode is the hot path; the arrow mode is the Python
-    extension seam; a silent divergence would make the `text_check`
-    flag change replay results."""
+    """The codegen text check must produce the verdicts of the pandas
+    reference (an Arrow pandas UDF over Python's ``str.strip``) —
+    including NULLs, every Python-whitespace-only string, NUL bytes,
+    and unicode payloads. A divergence would make replay results
+    depend on which definition of whitespace a check happens to use."""
     from dexspark.cdc.validate import _PY_WHITESPACE, flag_events
 
     edge_texts = (
@@ -102,15 +111,16 @@ def test_text_check_modes_agree(spark):
         " text string, tool string, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
-    def verdicts(mode):
-        cfg = ValidationConfig(check_ts_monotonic=False, text_check=mode)
-        return {
-            r["lsn"]: r[REASON_COL]
-            for r in flag_events(df, cfg).select("lsn", REASON_COL).collect()
-        }
-
-    expr, arrow = verdicts("expr"), verdicts("arrow")
-    assert expr == arrow
+    cfg = ValidationConfig(check_ts_monotonic=False)
+    expr = {
+        r["lsn"]: r[REASON_COL]
+        for r in flag_events(df, cfg).select("lsn", REASON_COL).collect()
+    }
+    want = {
+        r["lsn"]: None if r["ok"] else "malformed_text"
+        for r in df.select("lsn", _text_wellformed("text").alias("ok")).collect()
+    }
+    assert expr == want
     # sanity: the battery actually exercises both verdicts
     assert "malformed_text" in expr.values() and None in expr.values()
 

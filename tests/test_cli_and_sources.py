@@ -120,8 +120,9 @@ def test_gzip_json_segments_batch_and_stream(spark, tmp_table_dir):
 
 
 def test_cli_mor_replay_and_mirror(spark, tmp_table_dir):
-    """CLI composition: MOR replay with auto-compaction, then mirror a
-    downstream table from the change feed — downstream equals upstream."""
+    """CLI composition: MOR replay, a `maintain` pass that folds every
+    outstanding delta, then mirror a downstream table from the change
+    feed — downstream equals upstream."""
     log = gen_change_log(spark, 3000, n_convs=50, n_batches=2)
     log_dir = os.path.join(tmp_table_dir, "log")
     log.coalesce(2).write.parquet(log_dir)
@@ -137,10 +138,13 @@ def test_cli_mor_replay_and_mirror(spark, tmp_table_dir):
             "--checkpoint", cp,
             "--buckets", "8",
             "--strategy", "mor",
-            "--compact-every", "2",
         ]
     )
     assert rc == 0
+    table = LakeTable(spark, table_dir)
+    assert any(f.kind == "delta" for f in table.manifest().files)
+    assert main(["maintain", "--table", table_dir, "--delta-depth", "1"]) == 0
+    assert not any(f.kind == "delta" for f in table.manifest().files)
     assert main(
         ["mirror", "--source", table_dir, "--table", mirror_dir, "--buckets", "4"]
     ) == 0

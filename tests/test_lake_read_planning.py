@@ -15,8 +15,11 @@ Invariants under test:
 4. building a point read takes a bounded number of py4j round trips,
    on a COW table and on a MOR table with an outstanding delta, and
    each extra payload column adds at most 2;
-5. column names that need SQL quoting (a space, a dot, a backtick)
-   read, point-read, compact and diff correctly through the
+5. building a read's residual row filter for one ``=`` filter takes
+   at most a quarter of the round trips it took when every filter
+   built all five comparisons onto a ``F.lit(True)`` seed;
+6. column names that need SQL quoting (a space, a dot, a backtick)
+   read, point-read, filter, compact and diff correctly through the
    SQL-text projections.
 """
 
@@ -33,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from dexspark.lake import dv as lake_dv
+from dexspark.lake import stats as lake_stats
 from dexspark.lake.changes import table_changes
 from dexspark.lake.table import LakeTable
 
@@ -199,6 +203,22 @@ def test_round_trips_per_payload_column(spark, tmp_path, mode, py4j_calls):
     assert df.count() == 1
 
 
+# ``residual_condition([("k", "=", "k1")])`` took 82 round trips when
+# it built all five comparisons per filter on a ``F.lit(True)`` seed.
+SEEDED_RESIDUAL_CALLS = 82
+
+
+def test_residual_condition_builds_only_its_comparison(spark, py4j_calls):
+    filters = [("k", "=", "k1")]
+    lake_stats.residual_condition(filters)  # first-use lookups
+    c0 = py4j_calls()
+    cond = lake_stats.residual_condition(filters)
+    n = py4j_calls() - c0
+    assert n <= SEEDED_RESIDUAL_CALLS // 4, n
+    df = spark.createDataFrame([("k1", 1), ("k2", 2)], SCHEMA)
+    assert [r.k for r in df.filter(cond).collect()] == ["k1"]
+
+
 ODD_NAMES = ["a b", "x.y", "q`t"]
 
 
@@ -235,6 +255,7 @@ def test_mor_columns_that_need_quoting(spark, tmp_path):
 
     assert rows(t.read()) == want
     assert rows(t.read(filters=[("k", "=", "k1")])) == {"k1": want["k1"]}
+    assert rows(t.read(filters=[("x.y", "=", "x.y5")])) == {"k5": want["k5"]}
     assert rows(t.read(columns=["k", "x.y"])) == {
         k: (v[2],) for k, v in want.items()
     }

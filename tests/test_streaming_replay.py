@@ -1,6 +1,7 @@
 """Streaming replay: resumable checkpointed tail with exactly-once sink."""
 
 import os
+from collections import Counter
 
 import pyspark.sql.functions as F
 from pyspark.sql.types import _parse_datatype_string
@@ -89,8 +90,9 @@ def test_stream_replay_committed_batch_is_skipped(spark, tmp_table_dir):
 
 
 def test_stream_replay_auto_compaction(spark, tmp_table_dir):
-    """compact_every triggers bin-packing between micro-batches; final
-    state is unchanged and fragmented buckets collapse."""
+    """A file-count maintain_policy bin-packs between micro-batches:
+    it fires with reason ``files`` mid-run, fragmented buckets
+    collapse, and the final state is unchanged."""
     log = gen_change_log(spark, 2000, n_convs=30, n_batches=4)
     table = LakeTable.create(
         spark,
@@ -108,10 +110,17 @@ def test_stream_replay_auto_compaction(spark, tmp_table_dir):
         os.path.join(tmp_table_dir, "cp"),
         _parse_datatype_string(LOG_SCHEMA),
         max_files_per_trigger=1,
-        compact_every=2,
+        strategy="mor",
+        maintain_policy={"compact_min_files": 2, "compact_delta_depth": 99},
     )
     results = replay.run_available()
-    assert any(r.get("operation") == "compact" for r in results)
+    fired = [r for r in results if r.get("trigger") == "policy"]
+    assert any("compact" in r for r in fired)
+    assert any(
+        "files" in w for r in fired for w in r["buckets_triggered"].values()
+    )
+    files = Counter((f.layout, f.bucket) for f in table.manifest().files)
+    assert max(files.values()) < 2
     expected = expected_final_state(log)
     got = table.read()
     assert got.exceptAll(expected).count() == 0
@@ -194,10 +203,10 @@ def test_stream_replay_batch_metrics(spark, tmp_table_dir):
 
 
 def test_stream_replay_delta_depth_compaction(spark, tmp_table_dir):
-    """compact_delta_depth triggers compaction from READ AMPLIFICATION
-    (outstanding deltas per bucket), not batch count (VERDICT r3 item
-    #5): depth stays bounded across the whole run and the final state
-    is exact."""
+    """A delta-depth maintain_policy bounds READ AMPLIFICATION over the
+    whole run, not just at its end: no committed version of the table
+    holds more outstanding MOR deltas in a bucket than the bound, and
+    the final state is exact."""
     log = gen_change_log(spark, 2000, n_convs=30, n_batches=6)
     table, log_dir, _ = _setup(spark, tmp_table_dir)
     log.repartition(6, F.col("batch_seq")).write.partitionBy(
@@ -206,15 +215,17 @@ def test_stream_replay_delta_depth_compaction(spark, tmp_table_dir):
     replay = CdcStreamReplay(
         spark, table, log_dir + "/*", os.path.join(tmp_table_dir, "cp_d"),
         _parse_datatype_string(LOG_SCHEMA), max_files_per_trigger=1,
-        strategy="mor", compact_delta_depth=2,
+        strategy="mor", maintain_policy={"compact_delta_depth": 2},
     )
     replay.run_available()
-    compacts = [
-        r for r in replay.results if r.get("trigger") == "delta_depth"
-    ]
-    assert compacts, "delta-depth compaction never fired"
-    # depth is bounded by the knob at the end of the run
-    assert replay._delta_depth() < 2 + 1
+    assert any(r.get("trigger") == "policy" for r in replay.results), (
+        "delta-depth compaction never fired"
+    )
+    for m in table.history():
+        deltas = Counter(
+            (f.layout, f.bucket) for f in m.files if f.kind == "delta"
+        )
+        assert max(deltas.values(), default=0) <= 2, m.version
     expected = expected_final_state(log)
     got = table.read()
     assert got.exceptAll(expected).count() == 0
@@ -380,11 +391,11 @@ def test_stream_replay_scd2_mode_rejects_mor_and_salt(spark, tmp_table_dir):
 
 
 def test_stream_replay_maintain_policy(spark, tmp_table_dir):
-    """maintain_policy: the one-call policy engine rides the stream —
-    MOR delta depth triggers fold-downs mid-run, final state exact,
-    and the legacy knobs are refused alongside it."""
-    import pytest
-
+    """maintain_policy: the one-call policy engine rides the stream.
+    Compaction is triggered by READ AMPLIFICATION (outstanding MOR
+    deltas per bucket), not batch count: it fires mid-run with reason
+    ``delta_depth``, no bucket ends the run at the bound, and the final
+    state is exact."""
     log = gen_change_log(spark, 2000, n_convs=30, n_batches=6)
     table, log_dir, _ = _setup(spark, tmp_table_dir)
     log.repartition(6, F.col("batch_seq")).write.partitionBy(
@@ -406,17 +417,14 @@ def test_stream_replay_maintain_policy(spark, tmp_table_dir):
         for r in fired
         for w in r["buckets_triggered"].values()
     )
+    deltas = Counter(
+        (f.layout, f.bucket) for f in table.manifest().files if f.kind == "delta"
+    )
+    assert max(deltas.values(), default=0) < 2
     expected = expected_final_state(log)
     got = table.read()
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
-
-    with pytest.raises(ValueError, match="subsumes"):
-        CdcStreamReplay(
-            spark, table, log_dir, os.path.join(tmp_table_dir, "cp_x"),
-            _parse_datatype_string(LOG_SCHEMA),
-            compact_every=2, maintain_policy={},
-        )
 
 
 def test_stream_replay_enforces_table_constraints(spark, tmp_table_dir):

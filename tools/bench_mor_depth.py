@@ -3,7 +3,8 @@ function of outstanding delta depth (delta commits per bucket since
 the last compaction), and where compaction flattens it.
 
 This is the empirical justification for ``compact_delta_depth`` (the
-auto-compaction trigger in streaming/replay.py): MOR commits are
+delta-depth trigger of ``LakeTable.maintain``, which a streaming
+replay runs after every batch via ``maintain_policy``): MOR commits are
 O(batch), but every outstanding delta adds files the read-time
 max-LSN resolve must fold, so read cost grows with depth until a
 compaction folds deltas back into base. The trigger should sit where
@@ -113,7 +114,7 @@ def main():
         lines.append(f"| {depth} | {sec}s | {n:,} |")
     lines.append(
         f"\nCompaction itself took {compact_sec:.2f}s — the amortization "
-        "question `compact_delta_depth` answers: trigger compaction when "
+        "question `maintain(compact_delta_depth=...)` answers: trigger compaction when "
         "(marginal read slope x reads between compactions) exceeds that "
         "one-off cost. The depth-0 row shows the read returning to "
         "base-only cost after folding."
