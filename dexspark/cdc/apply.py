@@ -62,6 +62,114 @@ def maybe_evolve_schema(table: LakeTable, events: DataFrame) -> bool:
     return table.evolve_schema(StructType(fields))
 
 
+class RejectStage:
+    """The one reject side-channel of every CDC ingest path —
+    ``apply_changes``, ``apply_changes_scd2`` and the still-bad pass of
+    ``reprocess_quarantine`` (≙ the reference's per-record error
+    channel, FnCSVValidationGeneric.kt:30-48, FnOrchestrator.kt:95-111).
+
+    - **Flagging.** ``flagged`` is ``flag_events`` with the table's
+      "drop"-mode CHECK constraints (lake/constraints.py) extending
+      the reason chain: a violating non-delete is rejected with reason
+      ``constraint:<name>``, quarantined and counted like any
+      validation reject.
+    - **Counting.** Reject metrics ride the first job over ``flagged``
+      via an Observation instead of a dedicated count job per batch
+      (driver round-trips are the serial cost micro-batch throughput
+      is most sensitive to); ``counts()`` reads them.
+    - **Dead letters.** ``to_quarantine()`` appends the rejects to the
+      quarantine, gated on the quarantine's own ledger.
+
+    ``flagged`` is cached ONLY when a quarantine is attached: that is
+    the one consumer that re-reads it (the rejects append). Without a
+    quarantine, caching every pre-dedup event row is pure overhead on
+    the hot path — a multi-GB cache write per batch at 16M-event scale
+    whose memory pressure taxes the parallel stages — and the only
+    other reader (the AQE empty-relation fallback count, all-invalid
+    batches only) can recompute from the deterministic source files in
+    that rare path instead."""
+
+    def __init__(
+        self,
+        events: DataFrame,
+        cfg: ValidationConfig,
+        constraints: dict[str, dict],
+        quarantine: LakeTable | None = None,
+    ):
+        is_del = F.col(cfg.op_col) == F.lit(cfg.delete_op)
+        drop_reason = lake_ct.drop_mode_reason(constraints, skip=is_del)
+        self.reasons = REASONS + tuple(
+            lake_ct.REASON_PREFIX + n
+            for n, d in constraints.items()
+            if d["on_violation"] == "drop"
+        )
+        flagged = flag_events(events, cfg)
+        if drop_reason is not None:
+            flagged = flagged.withColumn(
+                REASON_COL, F.coalesce(F.col(REASON_COL), drop_reason)
+            )
+        self._obs = Observation()
+        flagged = flagged.observe(
+            self._obs,
+            F.count(F.col(REASON_COL)).alias("_rejected"),
+            *[
+                F.count(F.when(F.col(REASON_COL) == r, 1)).alias(r)
+                for r in self.reasons
+            ],
+        )
+        self.quarantine = quarantine
+        if quarantine is not None:
+            flagged = flagged.persist()
+        self.flagged = flagged
+        self.rejects = flagged.filter(F.col(REASON_COL).isNotNull())
+        self.valid = flagged.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
+
+    def counts(self) -> tuple[int, dict[str, int]]:
+        """(rejected, rejected_by_reason) — call after the first job
+        over ``flagged`` has run."""
+        try:
+            metrics = self._obs.get
+            n_rejected = int(metrics["_rejected"])
+            rejected_by_reason = {
+                r: int(metrics[r]) for r in self.reasons if metrics[r]
+            }
+        except Exception:
+            # all-invalid batch: AQE's empty-relation propagation
+            # replaces the (empty) valid subtree at runtime and the
+            # CollectMetrics node drops out of the final plan, so the
+            # observation never reports. Count from `flagged` instead
+            # (cached when a quarantine is attached; recomputed from
+            # the deterministic source files otherwise — this path
+            # only fires on an all-invalid batch).
+            counts = {
+                row[0]: int(row[1])
+                for row in self.rejects.groupBy(REASON_COL).count().collect()
+            }
+            n_rejected = sum(counts.values())
+            rejected_by_reason = counts
+        return n_rejected, rejected_by_reason
+
+    def to_quarantine(self, batch_id: str, n_rejected: int) -> None:
+        """Append the rejects as ``batch_id`` unless the quarantine's
+        ledger already holds it. Callers run this BEFORE the table
+        merge: a crash between the two is then recovered by the
+        checkpoint replay (the merge is still pending, this append
+        skips via the quarantine's own ledger). After the merge, a
+        crash would lose the rejects: the replay hits the table ledger
+        and returns before reaching the quarantine."""
+        if self.quarantine is None or not n_rejected:
+            return
+        if batch_id not in self.quarantine.committed_batch_ids():
+            self.quarantine.append(
+                self.rejects.withColumn("batch_id", F.lit(batch_id)),
+                summary={"batch_id": batch_id},
+            )
+
+    def unpersist(self) -> None:
+        if self.quarantine is not None:
+            self.flagged.unpersist()
+
+
 def apply_changes(
     table: LakeTable,
     events: DataFrame,
@@ -97,55 +205,18 @@ def apply_changes(
 
     # table-declared CHECK constraints join the validation stage
     # (lake/constraints.py): "drop"-mode expectations extend the reject
-    # reason chain (quarantined + counted like any validation reject);
-    # "fail"-mode invariants are counted on the post-dedup change set
-    # (see below) and abort the batch BEFORE anything commits. merge()
-    # skips its own check when given bucket_stats — this pass is the
-    # enforcement point.
+    # reason chain (RejectStage); "fail"-mode invariants are counted on
+    # the post-dedup change set (see below) and abort the batch BEFORE
+    # anything commits. merge() skips its own check when given
+    # bucket_stats — this pass is the enforcement point.
     defs = table.constraints()
-    drop_defs = {n: d for n, d in defs.items() if d["on_violation"] == "drop"}
     fail_defs = {n: d for n, d in defs.items() if d["on_violation"] == "fail"}
     is_del = F.col(cfg.op_col) == F.lit(cfg.delete_op)
-    reasons = REASONS + tuple(lake_ct.REASON_PREFIX + n for n in drop_defs)
 
-    # one full compute of the validation stage, shared by both sides;
-    # reject metrics ride the first job over it via Observation instead
-    # of paying a dedicated count job per batch (driver round-trips are
-    # the serial cost micro-batch throughput is most sensitive to)
-    obs = Observation()
-    flagged = flag_events(events, cfg)
-    if drop_defs:
-        flagged = flagged.withColumn(
-            REASON_COL,
-            F.coalesce(
-                F.col(REASON_COL),
-                lake_ct.drop_mode_reason(drop_defs, skip=is_del),
-            ),
-        )
-    flagged = flagged.observe(
-        obs,
-        F.count(F.col(REASON_COL)).alias("_rejected"),
-        *[
-            F.count(F.when(F.col(REASON_COL) == r, 1)).alias(r)
-            for r in reasons
-        ],
-    )
-    # Cache the full flagged batch ONLY when a quarantine is attached:
-    # that is the one consumer that re-reads it (the rejects append).
-    # Without a quarantine, caching every pre-dedup event row is pure
-    # overhead on the hot path — a multi-GB cache write per batch at
-    # 16M-event scale whose memory pressure taxes the parallel stages —
-    # and the only other reader (the AQE empty-relation fallback count
-    # below, all-invalid batches only) can recompute from the
-    # deterministic source files in that rare path instead.
-    persist_flagged = quarantine is not None
-    if persist_flagged:
-        flagged = flagged.persist()
+    # one full compute of the validation stage, shared by both sides
+    stage = RejectStage(events, cfg, defs, quarantine)
     deduped = None
     try:
-        rejects = flagged.filter(F.col(REASON_COL).isNotNull())
-        valid = flagged.filter(F.col(REASON_COL).isNull()).drop(REASON_COL)
-
         # fail-mode CHECK invariants are counted on the POST-dedup
         # change set — the rows the merge would actually write — so a
         # violating event superseded in the same batch by a newer valid
@@ -156,7 +227,7 @@ def apply_changes(
         fail_aggs = lake_ct.violation_count_aggs(fail_defs, skip=is_del)
         obs_fail = Observation()
         deduped = dedupe_latest(
-            valid, list(cfg.key_cols), cfg.lsn_col, salt_buckets=salt_buckets
+            stage.valid, list(cfg.key_cols), cfg.lsn_col, salt_buckets=salt_buckets
         )
         if fail_defs:
             deduped = deduped.observe(obs_fail, *fail_aggs)
@@ -167,11 +238,8 @@ def apply_changes(
         # This one job also yields the affected-bucket stats the merge
         # needs, so merge skips its own stats pass.
         m = table.manifest()
-        bucket = F.pmod(
-            F.xxhash64(F.col(m.bucket_key)), F.lit(m.num_buckets)
-        ).cast("int")
         lineage_rows = (
-            deduped.groupBy(bucket.alias("bucket"))
+            deduped.groupBy(table._bucket_expr(m).alias("bucket"))
             .agg(
                 F.count(F.lit(1)).alias("applied"),
                 F.min(cfg.lsn_col).alias("start_lsn"),
@@ -182,26 +250,7 @@ def apply_changes(
         # the lineage job above materialized `flagged` (and the
         # observation on it); metrics are now available without a
         # dedicated reject-count job
-        try:
-            metrics = obs.get
-            n_rejected = int(metrics["_rejected"])
-            rejected_by_reason = {
-                r: int(metrics[r]) for r in reasons if metrics[r]
-            }
-        except Exception:
-            # all-invalid batch: AQE's empty-relation propagation
-            # replaces the (empty) valid subtree at runtime and the
-            # CollectMetrics node drops out of the final plan, so the
-            # observation never reports. Count from `flagged` instead
-            # (cached when a quarantine is attached; recomputed from
-            # the deterministic source files otherwise — this path
-            # only fires on an all-invalid batch).
-            counts = {
-                row[0]: int(row[1])
-                for row in rejects.groupBy(REASON_COL).count().collect()
-            }
-            n_rejected = sum(counts.values())
-            rejected_by_reason = counts
+        n_rejected, rejected_by_reason = stage.counts()
         fail_counts = {}
         if fail_defs:
             try:
@@ -236,18 +285,7 @@ def apply_changes(
             for r in lineage_rows
         ]
 
-        # dead letters commit BEFORE the table merge: a crash between
-        # the two is then recovered by the checkpoint replay (the merge
-        # is still pending, this append skips via the quarantine's own
-        # ledger). The old order lost the batch's rejects forever when
-        # the crash landed after the merge — the replay would hit the
-        # table ledger and return before ever writing the quarantine.
-        if quarantine is not None and n_rejected:
-            if batch_id not in quarantine.committed_batch_ids():
-                quarantine.append(
-                    rejects.withColumn("batch_id", F.lit(batch_id)),
-                    summary={"batch_id": batch_id},
-                )
+        stage.to_quarantine(batch_id, n_rejected)
 
         changes = deduped.drop("batch_seq")
         info = table.merge(
@@ -279,8 +317,7 @@ def apply_changes(
         # cached dedup output into a long-running daemon's storage pool
         if deduped is not None:
             deduped.unpersist()
-        if persist_flagged:
-            flagged.unpersist()
+        stage.unpersist()
 
 
 def fix_from_spec(spec: dict[str, Any]):
@@ -349,14 +386,15 @@ def reprocess_quarantine(
     # -fixed rows as dead letters forever. The rewrite is idempotent:
     # still-bad is a pure function of the current quarantine contents.
     #
-    # second validation pass over `fixed` only — the dead-letter tail
-    # is small by construction, so the extra count job is trivial
-    # (Observation can't report here: a fully-fixed tail writes zero
-    # rows, the write schedules zero tasks, and the metrics never fire)
+    # second pass of the same reject stage over `fixed` only (so a row
+    # a drop-mode constraint still rejects stays a dead letter) — the
+    # dead-letter tail is small by construction, so the extra count
+    # job is trivial (Observation can't report here: a fully-fixed
+    # tail writes zero rows, the write schedules zero tasks, and the
+    # metrics never fire)
     still_bad = (
-        flag_events(fixed, cfg)
-        .filter(F.col(REASON_COL).isNotNull())
-        .withColumn("batch_id", F.lit(batch_id))
+        RejectStage(fixed, cfg, table.constraints())
+        .rejects.withColumn("batch_id", F.lit(batch_id))
         .persist()
     )
     try:

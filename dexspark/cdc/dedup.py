@@ -17,6 +17,10 @@ Why ``max(struct(lsn, ...))`` and not a window or ``max_by``:
   is unique per event, so struct ordering == LSN ordering; payload
   fields are only compared on exact LSN ties, i.e. verbatim
   at-least-once redeliveries, where either copy is correct.
+- A "narrow" plan (``max(lsn)`` per key, broadcast the winners, LEFT
+  SEMI the events back) keeps the payload out of the shuffle but
+  builds a broadcast of the batch's key set on the driver every
+  batch; no pipeline chose it, so it is not offered.
 
 Skew: map-side partial aggregation already defuses hot keys — a key
 with a million updates in a partition leaves that partition as ONE
@@ -42,66 +46,14 @@ def dedupe_latest(
     key_cols: list[str],
     lsn_col: str = "lsn",
     salt_buckets: int | None = None,
-    strategy: str = "agg",
 ) -> DataFrame:
     """Return exactly one row per key: the one with the highest LSN.
 
     Input may contain arbitrary duplicates and out-of-order LSNs;
-    output column set == input column set (order preserved).
-
-    strategy="agg" (default): one declarative ``max(struct(lsn,...))``
-    aggregate — no extra phases, no broadcast build; map-side partial
-    combine collapses duplicates before the shuffle.
-    strategy="narrow": the wide payload never shuffles (narrow max-lsn
-    agg + broadcast winners + left-semi filter); wins when duplicates
-    per key are high and the per-batch key set fits the broadcast
-    budget — the build of the winners relation is driver/executor
-    serial, so it is an option, not the default.
-    """
-    if strategy == "narrow":
-        return _dedupe_narrow(events, key_cols, lsn_col)
-    return _dedupe_agg(events, key_cols, lsn_col, salt_buckets)
-
-
-def _dedupe_narrow(
-    events: DataFrame, key_cols: list[str], lsn_col: str
-) -> DataFrame:
-    """Three cheap steps instead of one expensive one:
-
-    1. HashAggregate ``max(lsn)`` per key — only (key, lsn) columns
-       cross the network, with map-side partial combine (a hot key
-       leaves each map partition as one narrow row).
-    2. Broadcast the winners and LEFT SEMI join on (key, lsn) — the
-       event stream is filtered map-side, never shuffled.
-    3. ``dropDuplicates(key)`` over the winner rows only (collapses
-       verbatim at-least-once redeliveries that share the max LSN) —
-       a shuffle of ~|keys| rows, not |batch| rows.
-
-    At 10^10-event scale the micro-batch key set is bounded by trigger
-    sizing; if it outgrows the broadcast budget, use strategy="agg".
-
-    The semi join matches null-safely: groupBy keeps a NULL key (or a
-    NULL-lsn winner) as a group, and a plain equality join would then
-    silently drop those rows — making the two strategies disagree on
-    the same input (strategy flags must never change results).
-    """
-    winners = events.groupBy(*key_cols).agg(F.max(lsn_col).alias(lsn_col))
-    w = F.broadcast(winners).alias("w")
-    e = events.alias("e")
-    cond = None
-    for c in [*key_cols, lsn_col]:
-        term = F.col(f"e.{c}").eqNullSafe(F.col(f"w.{c}"))
-        cond = term if cond is None else cond & term
-    kept = e.join(w, cond, how="leftsemi")
-    return kept.dropDuplicates(key_cols).select(*events.columns)
-
-
-def _dedupe_agg(
-    events: DataFrame,
-    key_cols: list[str],
-    lsn_col: str,
-    salt_buckets: int | None,
-) -> DataFrame:
+    output column set == input column set (order preserved). One
+    declarative ``max(struct(lsn,...))`` aggregate — no extra phases,
+    no broadcast build; map-side partial combine collapses duplicates
+    before the shuffle."""
     cols = events.columns
     rest = [c for c in cols if c != lsn_col and c not in key_cols]
     packed = events.select(

@@ -34,7 +34,8 @@ Scale shape (10^10 events, hundreds of destinations):
 
 from __future__ import annotations
 
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -43,6 +44,67 @@ from dexspark.cdc.apply import apply_changes
 from dexspark.cdc.validate import ValidationConfig
 from dexspark.lake.table import LakeTable
 from dexspark.operators.routing import DEFAULT_ROUTE, ROUTE_COL, route_by_config
+
+
+def _check_routes(
+    tables: dict[str, LakeTable], routes: DataFrame, default_route: str
+) -> None:
+    """Every route the config can produce — including the fallback —
+    must have a destination table: a stamped row with nowhere to go is
+    a config bug and fails fast here, not silently at delivery time."""
+    known = {r[ROUTE_COL] for r in routes.select(ROUTE_COL).distinct().collect()}
+    missing = sorted((known | {default_route}) - set(tables))
+    if missing:
+        raise ValueError(f"routes with no destination table: {missing}")
+
+
+@contextmanager
+def _routed_batch(
+    events: DataFrame, routes: DataFrame, type_col: str, default_route: str
+) -> Iterator[tuple[DataFrame, dict[str, int]]]:
+    """The route-stamped batch, persisted for the fan-out, and its
+    per-route row counts from ONE map-combined count job (they feed
+    metrics and let empty destinations skip deterministically)."""
+    routed = route_by_config(
+        events, routes, type_col=type_col, default_route=default_route
+    ).persist()
+    try:
+        counts = {
+            r[ROUTE_COL]: int(r["count"])
+            for r in routed.groupBy(ROUTE_COL).count().collect()
+        }
+        yield routed, counts
+    finally:
+        routed.unpersist()
+
+
+def _slice(
+    routed: DataFrame, route: str, table: LakeTable, type_col: str
+) -> DataFrame:
+    """Destination ``route``'s rows. ``type_col`` is transport metadata
+    and is stripped — unless the destination's payload declares it
+    (routing on a real payload column, e.g. role, must not delete
+    that column)."""
+    dest_cols = {f.name for f in table.schema().fields}
+    drop = [ROUTE_COL] + ([] if type_col in dest_cols else [type_col])
+    return routed.filter(F.col(ROUTE_COL) == route).drop(*drop)
+
+
+def _publish_pins(catalog, tables: dict[str, LakeTable]) -> int | None:
+    """Advance the catalog pins to every destination's head, once all
+    of them committed; None pins re-resolve to each member's current
+    head. A fully-no-op redelivery moves nothing and publishes nothing
+    (pin churn would bloat the catalog history): returns None then,
+    else the new catalog version."""
+    pins = catalog.pins()
+    moved = any(
+        t.current_version() != pins[r]["version"]
+        for r, t in tables.items()
+        if r in pins
+    )
+    if not moved:
+        return None
+    return catalog.commit_with_retry({r: None for r in sorted(tables)})
 
 
 def apply_routed(
@@ -99,11 +161,7 @@ def apply_routed(
     ledgers cannot give (the reason lake/catalog.py exists), applied
     to the reference's demux topology.
     """
-    known = {r[ROUTE_COL] for r in routes.select(ROUTE_COL).distinct().collect()}
-    needed = known | {default_route}
-    missing = sorted(needed - set(tables))
-    if missing:
-        raise ValueError(f"routes with no destination table: {missing}")
+    _check_routes(tables, routes, default_route)
     if quarantines:
         paths = [q.table_dir for q in quarantines.values()]
         if len(set(paths)) != len(paths):
@@ -112,14 +170,10 @@ def apply_routed(
                 "(its ledger would drop the second destination's rejects)"
             )
 
-    routed = route_by_config(
-        events, routes, type_col=type_col, default_route=default_route
-    ).persist()
-    try:
-        counts = {
-            r[ROUTE_COL]: int(r["count"])
-            for r in routed.groupBy(ROUTE_COL).count().collect()
-        }
+    with _routed_batch(events, routes, type_col, default_route) as (
+        routed,
+        counts,
+    ):
         results: dict[str, Any] = {"batch_id": batch_id, "routes": {}}
 
         def one(route: str) -> dict[str, Any]:
@@ -128,15 +182,9 @@ def apply_routed(
                 # deterministic skip: a replayed batch re-derives the
                 # same empty slice, so "no ledger entry" stays correct
                 return {"routed": 0, "skipped": True}
-            # type_col is transport metadata and is stripped — unless
-            # the destination's payload declares it (routing on a real
-            # payload column, e.g. role, must not delete that column)
-            dest_cols = {f.name for f in tables[route].schema().fields}
-            drop = [ROUTE_COL] + ([] if type_col in dest_cols else [type_col])
-            slice_df = routed.filter(F.col(ROUTE_COL) == route).drop(*drop)
             res = apply_changes(
                 tables[route],
-                slice_df,
+                _slice(routed, route, tables[route], type_col),
                 batch_id=batch_id,
                 cfg=cfg,
                 quarantine=(quarantines or {}).get(route),
@@ -156,25 +204,13 @@ def apply_routed(
         else:
             for route in order:
                 results["routes"][route] = one(route)
+        # publish ONLY after every destination committed (a failed
+        # destination raised above) — the all-or-nothing visibility edge
         if catalog is not None:
-            # publish ONLY after every destination committed (a failed
-            # destination raised above) — the all-or-nothing visibility
-            # edge; None pins re-resolve to each member's current head.
-            # A fully-no-op redelivery moves nothing and publishes
-            # nothing (pin churn would bloat the catalog history).
-            pins = catalog.pins()
-            moved = any(
-                tables[r].current_version() != pins[r]["version"]
-                for r in order
-                if r in pins
-            )
-            if moved:
-                results["catalog_version"] = catalog.commit_with_retry(
-                    {r: None for r in order}
-                )
+            version = _publish_pins(catalog, tables)
+            if version is not None:
+                results["catalog_version"] = version
         return results
-    finally:
-        routed.unpersist()
 
 
 def apply_routed_wap(
@@ -228,20 +264,12 @@ def apply_routed_wap(
     Scale shape: identical to ``apply_routed`` (one broadcast route
     stamp, one persisted batch, per-destination independent jobs);
     branches add O(1) metadata per destination, no data copies."""
-    known = {r[ROUTE_COL] for r in routes.select(ROUTE_COL).distinct().collect()}
-    missing = sorted((known | {default_route}) - set(tables))
-    if missing:
-        raise ValueError(f"routes with no destination table: {missing}")
-
-    routed = route_by_config(
-        events, routes, type_col=type_col, default_route=default_route
-    ).persist()
+    _check_routes(tables, routes, default_route)
     bname = f"wap-{batch_id}"
-    try:
-        counts = {
-            r[ROUTE_COL]: int(r["count"])
-            for r in routed.groupBy(ROUTE_COL).count().collect()
-        }
+    with _routed_batch(events, routes, type_col, default_route) as (
+        routed,
+        counts,
+    ):
         order = sorted(tables)
         results: dict[str, Any] = {"batch_id": batch_id, "routes": {}}
         staged: dict[str, LakeTable] = {}
@@ -259,12 +287,9 @@ def apply_routed_wap(
             if bname in t.list_branches():
                 t.drop_branch(bname)  # stale stage from a failed attempt
             bt = t.create_branch(bname)
-            dest_cols = {f.name for f in t.schema().fields}
-            drop = [ROUTE_COL] + ([] if type_col in dest_cols else [type_col])
-            slice_df = routed.filter(F.col(ROUTE_COL) == route).drop(*drop)
             res = apply_changes(
-                bt, slice_df, batch_id=batch_id, cfg=cfg,
-                salt_buckets=salt_buckets, strategy=strategy,
+                bt, _slice(routed, route, t, type_col), batch_id=batch_id,
+                cfg=cfg, salt_buckets=salt_buckets, strategy=strategy,
             )
             res["routed"] = counts[route]
             results["routes"][route] = res
@@ -289,19 +314,10 @@ def apply_routed_wap(
             tables[r].drop_branch(bname)
         results["published"] = True
 
-        pins = catalog.pins()
-        moved = any(
-            tables[r].current_version() != pins[r]["version"]
-            for r in order
-            if r in pins
-        )
-        if moved:
-            results["catalog_version"] = catalog.commit_with_retry(
-                {r: None for r in order}
-            )
+        version = _publish_pins(catalog, tables)
+        if version is not None:
+            results["catalog_version"] = version
         return results
-    finally:
-        routed.unpersist()
 
 
 class RoutedCdcStreamReplay:
@@ -333,16 +349,14 @@ class RoutedCdcStreamReplay:
         concurrency: int = 1,
         catalog=None,
     ):
-        from dexspark.streaming.replay import CdcStreamReplay
+        from dexspark.streaming.replay import checkpoint_identity
 
         self.spark = spark
         self.tables = tables
         self.routes = routes
         self.log_dir = log_dir
         self.checkpoint_dir = checkpoint_dir
-        self.checkpoint_identity = CdcStreamReplay._checkpoint_identity(
-            checkpoint_dir
-        )
+        self.checkpoint_identity = checkpoint_identity(checkpoint_dir)
         self.log_schema = log_schema
         self.type_col = type_col
         self.default_route = default_route
@@ -389,6 +403,7 @@ class RoutedCdcStreamReplay:
 
     def run_available(self) -> list[dict[str, Any]]:
         from dexspark.sources.changelog import read_log_stream
+        from dexspark.streaming.replay import run_available_now
 
         stream = read_log_stream(
             self.spark,
@@ -397,11 +412,5 @@ class RoutedCdcStreamReplay:
             schema=self.log_schema,
             max_files_per_trigger=self.max_files_per_trigger,
         )
-        q = (
-            stream.writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._foreach_batch, self.checkpoint_dir)
         return self.results

@@ -47,8 +47,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dexspark.cdc.validate import REASON_COL, ValidationConfig, flag_events
-from dexspark.lake.table import LakeTable
+from dexspark.cdc.apply import RejectStage, maybe_evolve_schema
+from dexspark.cdc.validate import ValidationConfig
+from dexspark.lake.table import BROADCAST_THRESHOLD, LakeTable
 
 SCD2_COLS = ("valid_from_lsn", "valid_to_lsn", "closed_by_delete", "is_current")
 
@@ -201,7 +202,6 @@ def apply_changes_scd2(
     batch_id: str,
     cfg: ValidationConfig | None = None,
     quarantine: LakeTable | None = None,
-    broadcast_threshold: int = 2_000_000,
     extra_summary: dict[str, Any] | None = None,
 ) -> dict[str, Any]:
     """Validate → rebuild touched keys' interval chains → merge.
@@ -222,8 +222,6 @@ def apply_changes_scd2(
     # batch carrying a new payload column (or a widening) issues the
     # DDL before the rebuild, so earlier versions read back with NULLs
     # and rebuilt interval rows carry the evolved shape
-    from dexspark.cdc.apply import maybe_evolve_schema
-
     maybe_evolve_schema(history, events)
 
     key_cols = list(cfg.key_cols)
@@ -231,36 +229,17 @@ def apply_changes_scd2(
         f.name for f in history.schema().fields if f.name not in SCD2_COLS
     ]
 
-    # drop-mode expectations bind to the SCD2 ingest path exactly like
-    # apply_changes: a violating NEW image is quarantined with reason
-    # constraint:<name> instead of opening a history version (deletes
-    # exempt per the standard contract). Fail-mode invariants are
-    # enforced by merge's stats pass over the rebuilt rows — the rows
-    # actually written.
-    from dexspark.lake import constraints as lake_ct
-
-    drop_defs = {
-        n: d
-        for n, d in history.constraints().items()
-        if d["on_violation"] == "drop"
-    }
-    flagged = flag_events(events, cfg)
-    if drop_defs:
-        is_del = F.col(cfg.op_col) == F.lit(cfg.delete_op)
-        flagged = flagged.withColumn(
-            REASON_COL,
-            F.coalesce(
-                F.col(REASON_COL),
-                lake_ct.drop_mode_reason(drop_defs, skip=is_del),
-            ),
-        )
-    flagged = flagged.persist()
+    # drop-mode expectations bind to the SCD2 ingest path through the
+    # same reject stage as apply_changes: a violating NEW image is
+    # quarantined with reason constraint:<name> instead of opening a
+    # history version (deletes exempt per the standard contract).
+    # Fail-mode invariants are enforced by merge's stats pass over the
+    # rebuilt rows — the rows actually written.
+    stage = RejectStage(events, cfg, history.constraints(), quarantine)
     new_ev = None
     try:
-        rejects = flagged.filter(F.col(REASON_COL).isNotNull())
         new_ev = (
-            flagged.filter(F.col(REASON_COL).isNull())
-            .select("lsn", "op", *payload)
+            stage.valid.select("lsn", "op", *payload)
             .dropDuplicates(key_cols + ["lsn"])  # redelivered segments
             .persist()
         )
@@ -269,11 +248,8 @@ def apply_changes_scd2(
         # small job: ≤ num_buckets rows), then semi-join down to the
         # touched keys. n_keys also sizes the broadcast decision.
         m = history.manifest()
-        bucket = F.pmod(
-            F.xxhash64(F.col(m.bucket_key)), F.lit(m.num_buckets)
-        ).cast("int")
         stats = (
-            new_ev.groupBy(bucket.alias("_b"))
+            new_ev.groupBy(history._bucket_expr(m).alias("_b"))
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
@@ -281,7 +257,7 @@ def apply_changes_scd2(
         n_events = int(sum(r["n"] for r in stats))
 
         keys = new_ev.select(*key_cols).distinct()
-        if n_events <= broadcast_threshold:
+        if n_events <= BROADCAST_THRESHOLD:
             keys = F.broadcast(keys)
         stored = history.read(buckets=buckets).join(
             keys, on=key_cols, how="left_semi"
@@ -351,13 +327,9 @@ def apply_changes_scd2(
         ).withColumn("op", F.lit("D"))
         rebuilt = rebuilt.unionByName(stale)
 
-        n_rejected = rejects.count()
-        if quarantine is not None and n_rejected:
-            if batch_id not in quarantine.committed_batch_ids():
-                quarantine.append(
-                    rejects.withColumn("batch_id", F.lit(batch_id)),
-                    summary={"batch_id": batch_id},
-                )
+        # the stats job above materialized the reject observation
+        n_rejected, rejected_by_reason = stage.counts()
+        stage.to_quarantine(batch_id, n_rejected)
 
         info = history.merge(
             rebuilt,
@@ -370,6 +342,7 @@ def apply_changes_scd2(
                 "batch_id": batch_id,
                 "events": n_events,
                 "rejected": n_rejected,
+                "rejected_by_reason": rejected_by_reason,
                 "touched_buckets": buckets,
             },
         )
@@ -378,9 +351,10 @@ def apply_changes_scd2(
             "skipped": False,
             "events": n_events,
             "rejected": n_rejected,
+            "rejected_by_reason": rejected_by_reason,
             "merge": info,
         }
     finally:
         if new_ev is not None:
             new_ev.unpersist()
-        flagged.unpersist()
+        stage.unpersist()

@@ -561,6 +561,8 @@ class SnapshotStreamIngest:
 
         from pyspark.sql.types import LongType, StructField, StructType
 
+        from dexspark.streaming.replay import run_available_now
+
         rdir = _os.path.join(self.feed_dir, READY_DIR)
         _os.makedirs(rdir, exist_ok=True)
         reader = self.spark.readStream.schema(
@@ -570,12 +572,7 @@ class SnapshotStreamIngest:
             reader = reader.option(
                 "maxFilesPerTrigger", self.max_files_per_trigger
             )
-        stream = reader.json(rdir)
-        q = (
-            stream.writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            reader.json(rdir), self._foreach_batch, self.checkpoint_dir
         )
-        q.awaitTermination()
         return self.results

@@ -56,9 +56,8 @@ class ValidationConfig:
     # how the per-turn watermark joins back onto the event stream for
     # the ts-monotonicity check. "broadcast" (default): the watermark
     # table is O(distinct (conv, turn) in the batch) — bounded by
-    # trigger sizing, the same contract as dedup's "narrow" strategy —
-    # so broadcasting it keeps the wide event stream from ever
-    # shuffling for this check. "shuffle": plain join, for the
+    # trigger sizing — so broadcasting it keeps the wide event stream
+    # from ever shuffling for this check. "shuffle": plain join, for the
     # pathological batch whose key set outgrows the broadcast budget.
     ts_check_join: str = "broadcast"
 

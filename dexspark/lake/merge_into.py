@@ -46,7 +46,6 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 Clause = tuple  # (kind, condition_sql_or_None, assignments_dict_or_None)
 
@@ -123,7 +122,7 @@ def merge_into(
 
 def _attempt(table, m, source, key_cols, wm, wnm, wnmbs, lsn, summary):
     from dexspark.lake.table import (
-        BUCKET_COL, SYS_DELETED, SYS_LSN, _align,
+        BUCKET_COL, SYS_DELETED, SYS_LSN, _align, _with_system,
     )
 
     current = table.schema(m.version)
@@ -245,11 +244,7 @@ def _attempt(table, m, source, key_cols, wm, wnm, wnmbs, lsn, summary):
     )
     kept = kept.drop("_written")
 
-    current_sys = StructType(
-        list(current.fields)
-        + [StructField(SYS_LSN, LongType(), True),
-           StructField(SYS_DELETED, BooleanType(), True)]
-    )
+    current_sys = _with_system(current)
     removed = {f.path for f in members}
     new_files = table._write_data(
         _align(kept, current_sys), m, n_buckets_hint=len(affected),

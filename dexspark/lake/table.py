@@ -10,8 +10,8 @@ Scale design (the part that matters at 10^10 events / 100 TB):
 - The change batch is normally tiny relative to the table, so the
   anti-join that drops superseded target rows broadcasts the batch:
   the big (target) side is never shuffled and the rewrite stays
-  partition-local. Above ``broadcast_threshold`` rows we fall back to a
-  shuffle join and let AQE handle skew.
+  partition-local. Above ``BROADCAST_THRESHOLD`` change rows we fall
+  back to a shuffle join and let AQE handle skew.
 - ``num_buckets`` is the unit of merge parallelism AND write
   amplification: at 100 TB you would run B=4096 so a batch touching 1%
   of conversations rewrites ~1% of the table. Tests use B=8..32.
@@ -82,6 +82,28 @@ SYS_LSN = "_applied_lsn"
 SYS_DELETED = "_deleted"
 # the tombstone filter readers apply, as one SQL expression string
 _LIVE = f"NOT coalesce({SYS_DELETED}, false)"
+# change rows up to which a merge broadcasts its key side (the SCD2
+# apply's touched-key semi-join too); above it, a shuffle join
+BROADCAST_THRESHOLD = 2_000_000
+
+
+def _with_system(schema: StructType) -> StructType:
+    """``schema`` plus the physical system columns every data file
+    carries after the payload."""
+    return StructType(
+        list(schema.fields)
+        + [
+            StructField(SYS_LSN, LongType(), True),
+            StructField(SYS_DELETED, BooleanType(), True),
+        ]
+    )
+
+
+def _schema_of(m: mf.Manifest, schema_id: int | None = None) -> StructType:
+    """Schema ``schema_id`` (default: the current one), decoded from
+    the manifest already in hand."""
+    sid = m.current_schema_id if schema_id is None else schema_id
+    return StructType.fromJson(json.loads(m.schemas[sid]))
 
 # widenings allowed by evolve_schema (Iceberg-compatible set)
 _WIDENINGS = {
@@ -245,10 +267,7 @@ class LakeTable:
             raise
 
     def schema(self, version: int | None = None) -> StructType:
-        m = self.manifest(version)
-        return StructType.fromJson(
-            __import__("json").loads(m.schemas[m.current_schema_id])
-        )
+        return _schema_of(self.manifest(version))
 
     def history(self) -> list[mf.Manifest]:
         return [self.manifest(v) for v in mf.available_versions(self.meta_dir)]
@@ -675,9 +694,7 @@ class LakeTable:
         if as_of is not None:
             version = self.resolve_as_of(as_of)
         m = self.manifest(version)
-        current = StructType.fromJson(
-            __import__("json").loads(m.schemas[m.current_schema_id])
-        )
+        current = _schema_of(m)
         if filters:
             filters = lake_stats.canonicalize_filters(filters, current)
         if columns is not None:
@@ -696,11 +713,7 @@ class LakeTable:
             current = StructType(
                 [f for f in current.fields if f.name in scan_cols]
             )
-        sys_fields = [
-            StructField(SYS_LSN, LongType(), True),
-            StructField(SYS_DELETED, BooleanType(), True),
-        ]
-        current_sys = StructType(list(current.fields) + sys_fields)
+        current_sys = _with_system(current)
         files = m.files
         if buckets is not None:
             # closed to whole key-space classes first (identity while
@@ -781,16 +794,7 @@ class LakeTable:
         scanned_files}`` so callers (and tests) can see how much was
         proved versus scanned."""
         m = self.manifest(version)
-        current = StructType.fromJson(
-            __import__("json").loads(m.schemas[m.current_schema_id])
-        )
-        current_sys = StructType(
-            list(current.fields)
-            + [
-                StructField(SYS_LSN, LongType(), True),
-                StructField(SYS_DELETED, BooleanType(), True),
-            ]
-        )
+        current_sys = _with_system(_schema_of(m))
         delta_files, non_delta = self._mor_partition(list(m.files), m)
         meta_total = 0
         meta_files = 0
@@ -855,16 +859,9 @@ class LakeTable:
             )
         dv_dirs = sorted({f.dv for f in files if f.dv})
         need_pos = with_positions or bool(dv_dirs)
-        sys_fields = [
-            StructField(SYS_LSN, LongType(), True),
-            StructField(SYS_DELETED, BooleanType(), True),
-        ]
         parts = []
         for sid, paths in by_schema.items():
-            writer_schema = StructType.fromJson(
-                __import__("json").loads(m.schemas[sid])
-            )
-            writer_sys = StructType(list(writer_schema.fields) + sys_fields)
+            writer_sys = _with_system(_schema_of(m, sid))
             df = lake_dv.read_listed(self.spark, writer_sys, paths)
             if need_pos:
                 # attach file identity BEFORE the align projection —
@@ -1006,19 +1003,10 @@ class LakeTable:
             )
         df.write.partitionBy(BUCKET_COL).parquet(out_abs, mode="errorifexists")
         new_files: list[mf.DataFile] = []
-        writer_schema = StructType.fromJson(
-            __import__("json").loads(m.schemas[m.current_schema_id])
-        )
         # stats over the PHYSICAL schema: system columns give each file
         # its LSN span and a tombstone-free proof (_deleted [false,
         # false]) — what count_rows() answers from metadata with
-        writer_phys = StructType(
-            list(writer_schema.fields)
-            + [
-                StructField(SYS_LSN, LongType(), True),
-                StructField(SYS_DELETED, BooleanType(), True),
-            ]
-        )
+        writer_phys = _with_system(_schema_of(m))
         if os.path.isdir(out_abs):
             for entry in os.listdir(out_abs):
                 if not entry.startswith(f"{BUCKET_COL}="):
@@ -1410,7 +1398,6 @@ class LakeTable:
         op_col: str = "op",
         delete_value: str = "D",
         summary: dict[str, Any] | None = None,
-        broadcast_threshold: int = 2_000_000,
         bucket_stats: dict[int, int] | None = None,
         lsn_col: str | None = "lsn",
         strategy: str = "cow",
@@ -1546,7 +1533,7 @@ class LakeTable:
                     }
                 return self._merge_attempt(
                     m, changes, key_cols, op_col, delete_value,
-                    summary, broadcast_threshold, lsn_col, strategy,
+                    summary, lsn_col, strategy,
                     affected, n_changes,
                 )
 
@@ -1563,7 +1550,6 @@ class LakeTable:
         op_col: str,
         delete_value: str,
         summary: dict[str, Any] | None,
-        broadcast_threshold: int,
         lsn_col: str | None,
         strategy: str,
         affected: set[int],
@@ -1574,9 +1560,7 @@ class LakeTable:
         Raises CommitConflict when the commit loses the version race
         AND cannot be rebased (see _commit_delta) — the caller
         recomputes from the fresh head."""
-        current = StructType.fromJson(
-            __import__("json").loads(m.schemas[m.current_schema_id])
-        )
+        current = _schema_of(m)
         if n_changes == 0:
             # nothing to do — still commit the (empty) summary so the
             # batch ledger records it and replay stays idempotent
@@ -1589,13 +1573,7 @@ class LakeTable:
             self._commit_delta(m, set(), [], info)
             return info
 
-        current_sys = StructType(
-            list(current.fields)
-            + [
-                StructField(SYS_LSN, LongType(), True),
-                StructField(SYS_DELETED, BooleanType(), True),
-            ]
-        )
+        current_sys = _with_system(current)
         conditional = lsn_col is not None and lsn_col in changes.columns
 
         if strategy == "mor":
@@ -1675,7 +1653,7 @@ class LakeTable:
             SYS_DELETED, F.col(op_col) == F.lit(delete_value)
         )
         keys = upsert_src.select(*key_cols)
-        if n_changes <= broadcast_threshold:
+        if n_changes <= BROADCAST_THRESHOLD:
             keys = F.broadcast(keys)
         survivors = target.join(keys, on=key_cols, how="left_anti")
 
@@ -1809,13 +1787,7 @@ class LakeTable:
             nonlocal filters
             current = self.schema(m.version)
             filters = lake_stats.canonicalize_filters(filters, current)
-            current_sys = StructType(
-                list(current.fields)
-                + [
-                    StructField(SYS_LSN, LongType(), True),
-                    StructField(SYS_DELETED, BooleanType(), True),
-                ]
-            )
+            current_sys = _with_system(current)
             key_vals = self._key_eq_values(filters, m)
             kb = self._buckets_for_keys(m, key_vals)
             scoped = (
@@ -3070,7 +3042,7 @@ class LakeTable:
         """
 
         def attempt(m: mf.Manifest) -> bool:
-            current = self.schema(m.version)
+            current = _schema_of(m)
             if new_schema.json() == current.json():
                 return False
             cur_fields = {f.name: f for f in current.fields}
@@ -3084,9 +3056,6 @@ class LakeTable:
             for name in cur_fields:
                 if name not in new_schema.fieldNames():
                     raise ValueError(f"dropping column {name!r} is not supported")
-            new_sid = max(m.schemas) + 1
-            schemas = dict(m.schemas)
-            schemas[new_sid] = new_schema.json()
             ids = self._seeded_field_ids(m)
             cur_map = ids[m.current_schema_id]
             nxt_id = (
@@ -3105,21 +3074,39 @@ class LakeTable:
                     # old files' data for it stays dead (by-id align)
                     new_map[fname] = nxt_id
                     nxt_id += 1
-            ids[new_sid] = new_map
             # metadata-only: recompute on conflict is one manifest
             # re-read + re-validate against the (possibly evolved) new
             # head
-            self._commit_next(
-                m,
-                m.files,
-                {"operation": "evolve_schema", "schema_id": new_sid},
-                schemas=schemas,
-                current_schema_id=new_sid,
-                field_ids=ids,
+            self._commit_schema(
+                m, new_schema, ids, new_map, {"operation": "evolve_schema"}
             )
             return True
 
         return self._transact(attempt)
+
+    def _commit_schema(
+        self,
+        m: mf.Manifest,
+        new_schema: StructType,
+        ids: dict[int, dict[str, int]],
+        new_map: dict[str, int],
+        summary: dict[str, Any],
+    ) -> int:
+        """Commit ``new_schema`` as the next schema id over ``m``'s
+        files, with ``new_map`` (name → stable field id) as its id map
+        beside ``ids`` (``_seeded_field_ids(m)``). Returns the new
+        schema id, which ``summary`` also records."""
+        new_sid = max(m.schemas) + 1
+        ids[new_sid] = new_map
+        self._commit_next(
+            m,
+            m.files,
+            {**summary, "schema_id": new_sid},
+            schemas={**m.schemas, new_sid: new_schema.json()},
+            current_schema_id=new_sid,
+            field_ids=ids,
+        )
+        return new_sid
 
     def _seeded_field_ids(self, m: mf.Manifest) -> dict[int, dict[str, int]]:
         """``field_ids`` with EVERY schema id covered. Pre-upgrade
@@ -3127,8 +3114,6 @@ class LakeTable:
         against the maps already present — valid because pre-upgrade
         evolution was strictly add/widen, so equal names are the same
         logical field."""
-        import json as _json
-
         ids = {k: dict(v) for k, v in m.field_ids.items()}
         registry: dict[str, int] = {}
         for sid in sorted(ids):
@@ -3138,9 +3123,7 @@ class LakeTable:
             if sid in ids:
                 continue
             mp: dict[str, int] = {}
-            for n in StructType.fromJson(
-                _json.loads(m.schemas[sid])
-            ).fieldNames():
+            for n in _schema_of(m, sid).fieldNames():
                 if n not in registry:
                     registry[n] = nxt
                     nxt += 1
@@ -3301,7 +3284,7 @@ class LakeTable:
             raise ValueError(f"invalid column name {new!r}")
 
         def attempt(m: mf.Manifest) -> int:
-            current = self.schema(m.version)
+            current = _schema_of(m)
             names = current.fieldNames()
             if old not in names:
                 raise ValueError(f"no column {old!r} to rename")
@@ -3323,24 +3306,13 @@ class LakeTable:
                 (new if n == old else n): i
                 for n, i in ids[m.current_schema_id].items()
             }
-            new_sid = max(m.schemas) + 1
-            schemas = dict(m.schemas)
-            schemas[new_sid] = new_schema.json()
-            ids[new_sid] = ids_new
-            self._commit_next(
+            return self._commit_schema(
                 m,
-                m.files,
-                {
-                    "operation": "rename_column",
-                    "from": old,
-                    "to": new,
-                    "schema_id": new_sid,
-                },
-                schemas=schemas,
-                current_schema_id=new_sid,
-                field_ids=ids,
+                new_schema,
+                ids,
+                ids_new,
+                {"operation": "rename_column", "from": old, "to": new},
             )
-            return new_sid
 
         return self._transact(attempt)
 
@@ -3356,7 +3328,7 @@ class LakeTable:
         everywhere. Returns the new schema id."""
 
         def attempt(m: mf.Manifest) -> int:
-            current = self.schema(m.version)
+            current = _schema_of(m)
             if name not in current.fieldNames():
                 raise ValueError(f"no column {name!r} to drop")
             if len(current.fields) == 1:
@@ -3371,23 +3343,13 @@ class LakeTable:
                 for n, i in ids[m.current_schema_id].items()
                 if n != name
             }
-            new_sid = max(m.schemas) + 1
-            schemas = dict(m.schemas)
-            schemas[new_sid] = new_schema.json()
-            ids[new_sid] = ids_new
-            self._commit_next(
+            return self._commit_schema(
                 m,
-                m.files,
-                {
-                    "operation": "drop_column",
-                    "column": name,
-                    "schema_id": new_sid,
-                },
-                schemas=schemas,
-                current_schema_id=new_sid,
-                field_ids=ids,
+                new_schema,
+                ids,
+                ids_new,
+                {"operation": "drop_column", "column": name},
             )
-            return new_sid
 
         return self._transact(attempt)
 

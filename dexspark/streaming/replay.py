@@ -27,14 +27,51 @@ triggers so a micro-batch's dedup output fits the shuffle budget, and
 
 from __future__ import annotations
 
+import os
+import uuid
 from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from dexspark.cdc.apply import apply_changes
 from dexspark.cdc.validate import ValidationConfig
 from dexspark.lake.table import LakeTable
+
+
+def checkpoint_identity(checkpoint_dir: str) -> str:
+    """The identity minted once per checkpoint lifetime, stored in the
+    checkpoint dir (see ``CdcStreamReplay``'s ledger ids)."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    p = os.path.join(checkpoint_dir, "dexspark_identity")
+    try:
+        # O_EXCL: exactly one identity per checkpoint lifetime,
+        # even with two replay instances starting concurrently
+        fd = os.open(p, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
+        with os.fdopen(fd, "w") as fh:
+            fh.write(uuid.uuid4().hex[:12])
+    except FileExistsError:
+        pass
+    with open(p) as fh:
+        return fh.read().strip()
+
+
+def run_available_now(
+    stream: DataFrame,
+    foreach_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> None:
+    """Feed everything ``stream`` holds now through ``foreach_batch``
+    (Trigger.AvailableNow, checkpointed in ``checkpoint_dir``) and
+    return once it is drained. Re-invoke after new input lands — the
+    checkpoint resumes from the last committed offset."""
+    (
+        stream.writeStream.foreachBatch(foreach_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 class CdcStreamReplay:
@@ -69,7 +106,7 @@ class CdcStreamReplay:
         # the checkpoint dir, so a resume keeps it (exactly-once
         # replay still no-ops) while a wipe/new checkpoint mints a new
         # one (fresh epochs land instead of vanishing).
-        self.checkpoint_identity = self._checkpoint_identity(checkpoint_dir)
+        self.checkpoint_identity = checkpoint_identity(checkpoint_dir)
         self.log_schema = log_schema
         self.cfg = cfg
         # ≙ FnCacheUpdater.kt:22-46 (live config cache): when given,
@@ -110,24 +147,6 @@ class CdcStreamReplay:
         # compacts; a batch job compacts with ``dexspark maintain``.
         self.maintain_policy = maintain_policy
         self.results: list[dict[str, Any]] = []
-
-    @staticmethod
-    def _checkpoint_identity(checkpoint_dir: str) -> str:
-        import os
-        import uuid
-
-        os.makedirs(checkpoint_dir, exist_ok=True)
-        p = os.path.join(checkpoint_dir, "dexspark_identity")
-        try:
-            # O_EXCL: exactly one identity per checkpoint lifetime,
-            # even with two replay instances starting concurrently
-            fd = os.open(p, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            with os.fdopen(fd, "w") as fh:
-                fh.write(uuid.uuid4().hex[:12])
-        except FileExistsError:
-            pass
-        with open(p) as fh:
-            return fh.read().strip()
 
     def _foreach_batch(self, batch_df, epoch_id: int) -> None:
         import time
@@ -208,11 +227,5 @@ class CdcStreamReplay:
             schema=self.log_schema,
             max_files_per_trigger=self.max_files_per_trigger,
         )
-        q = (
-            stream.writeStream.foreachBatch(self._foreach_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, self._foreach_batch, self.checkpoint_dir)
         return self.results

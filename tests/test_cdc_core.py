@@ -54,14 +54,6 @@ def test_dedupe_plan_is_aggregate_not_window(spark):
     # map-side combine must exist: duplicates collapse BEFORE the shuffle
     assert "partial_max" in plan
 
-    narrow = dedupe_latest(
-        df, ["conv_id", "turn_idx"], strategy="narrow"
-    )._jdf.queryExecution().executedPlan().toString()
-    # narrow strategy: hash-agg of (key, lsn), winners broadcast, events
-    # filtered via LEFT SEMI without ever shuffling the payload
-    assert "HashAggregate" in narrow
-    assert "BroadcastHashJoin" in narrow and "LeftSemi" in narrow
-
 
 def test_validate_quarantine_reasons(spark):
     log = gen_change_log(spark, 4000, bad_role_pct=5, ts_violation_pct=3)
@@ -336,6 +328,88 @@ def test_reprocess_quarantine_converges(spark, tmp_table_dir):
     r3 = reprocess_quarantine(table, q, fix, batch_id="r3")
     assert r3["still_quarantined"] == 0 and r3["applied"] > 0
     assert q.read().count() == 0
+
+
+def _quarantine(spark, d, payload=PAYLOAD_SCHEMA):
+    from pyspark.sql.types import _parse_datatype_string
+
+    return LakeTable.create(
+        spark,
+        d,
+        _parse_datatype_string(
+            "lsn long, op string, batch_seq long, "
+            + payload
+            + f", {REASON_COL} string, batch_id string"
+        ),
+        "conv_id",
+        4,
+    )
+
+
+def test_reprocess_keeps_constraint_rejects_quarantined(spark, tmp_table_dir):
+    """A row a drop-mode CHECK constraint rejects is still a dead
+    letter after a reprocess that does not fix it: the still-bad pass
+    runs the same reject stage as the apply, so the quarantine keeps
+    the row under its ``constraint:<name>`` reason (it used to be
+    rewritten to zero rows while the apply rejected them all again)."""
+    import os
+
+    from dexspark.cdc.apply import reprocess_quarantine
+
+    table = _mk_table(spark, os.path.join(tmp_table_dir, "t"), num_buckets=4)
+    table.add_constraint("turn_cap", "turn_idx < 3", on_violation="drop")
+    q = _quarantine(spark, os.path.join(tmp_table_dir, "q"))
+    log = gen_change_log(spark, 400, n_convs=10, n_batches=1)
+    res = apply_changes(table, log, batch_id="b0", quarantine=q)
+    n_bad = res["rejected"]
+    assert n_bad > 0
+    assert res["rejected_by_reason"] == {"constraint:turn_cap": n_bad}
+
+    r1 = reprocess_quarantine(table, q, lambda df: df, batch_id="r1")
+    assert r1["rejected"] == n_bad
+    assert r1["still_quarantined"] == n_bad
+    reasons = [r[REASON_COL] for r in q.read().select(REASON_COL).collect()]
+    assert reasons == ["constraint:turn_cap"] * n_bad
+
+
+def test_scd1_scd2_reject_stage_parity(spark, tmp_table_dir):
+    """SCD1 and SCD2 run one reject stage: the same batch (bad roles +
+    a drop-mode constraint) quarantines the same rows with the same
+    reasons and reports the same ``rejected_by_reason``."""
+    import os
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from dexspark.cdc.scd2 import apply_changes_scd2, scd2_schema
+
+    scd1 = _mk_table(spark, os.path.join(tmp_table_dir, "scd1"), num_buckets=4)
+    scd2 = LakeTable.create(
+        spark,
+        os.path.join(tmp_table_dir, "scd2"),
+        scd2_schema(_parse_datatype_string(PAYLOAD_SCHEMA)),
+        "conv_id",
+        4,
+    )
+    for t in (scd1, scd2):
+        t.add_constraint("turn_cap", "turn_idx < 20", on_violation="drop")
+    q1 = _quarantine(spark, os.path.join(tmp_table_dir, "q1"))
+    q2 = _quarantine(spark, os.path.join(tmp_table_dir, "q2"))
+    log = gen_change_log(spark, 600, n_convs=10, n_batches=1, bad_role_pct=10)
+
+    r1 = apply_changes(scd1, log, batch_id="b0", quarantine=q1)
+    r2 = apply_changes_scd2(scd2, log, batch_id="b0", quarantine=q2)
+    assert {"bad_role", "constraint:turn_cap"} <= set(r1["rejected_by_reason"])
+    assert r2["rejected_by_reason"] == r1["rejected_by_reason"]
+    assert r2["rejected"] == r1["rejected"]
+    assert scd2.manifest().summary["rejected_by_reason"] == r1["rejected_by_reason"]
+
+    def rows(q):
+        return sorted(
+            (r.lsn, r[REASON_COL]) for r in q.read().select("lsn", REASON_COL).collect()
+        )
+
+    assert rows(q1) == rows(q2)
+    assert len(rows(q1)) == r1["rejected"]
 
 
 def test_replay_mor_equals_cow(spark, tmp_table_dir):
